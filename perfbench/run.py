@@ -1,13 +1,14 @@
 #!/usr/bin/env python3
 """Run one benchmark workload and print its result line.
 
-    python3 perfbench/run.py --workload screen|refit|corpus --seed N \
+    python3 perfbench/run.py --workload refit|corpus --seed N \
         --seconds S --trace 0|1
 
 Run from the repository root. The first run builds the engine and the
-benchmark from source with sbt (the classpath is cached under .bench_build/,
-keyed by a hash of the sources); later runs start the JVM directly. The
-last line of stdout is the JSON result; Spark's log goes to stderr.
+benchmark from source with sbt and keeps a copy of the compiled classes
+under .bench_build/, keyed by a hash of the sources; later runs of the same
+sources start the JVM on that copy directly. The last line of stdout is the
+JSON result; Spark's log goes to stderr.
 """
 import argparse
 import hashlib
@@ -17,12 +18,13 @@ import shutil
 import signal
 import subprocess
 import sys
+import tempfile
 import time
 
 BENCH = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(BENCH)
 WORK = os.path.join(ROOT, ".bench_build", "perfbench")
-WORKLOADS = ("screen", "refit", "corpus")
+WORKLOADS = ("refit", "corpus")
 RESULT_KEYS = {"correct", "attempted", "failed", "metrics"}
 HEAP = "3g"
 BUILD_TIMEOUT_S = 850
@@ -77,10 +79,22 @@ def source_hash():
 
 
 def classpath(digest):
-    cached = os.path.join(WORK, f"classpath-{digest[:16]}.txt")
-    if os.path.exists(cached):
-        with open(cached) as fh:
-            return fh.read().strip()
+    """The classpath of a build of these exact sources.
+
+    Each digest owns its build: the class directories sbt compiles into
+    (target/ in the engine and the benchmark) are copied under
+    .bench_build/perfbench/build-<digest>/ and the classpath points at the
+    copies. A later build of other sources, or an sbt clean, cannot change
+    what a cached digest runs. Jars (the Spark distribution, the library
+    cache) are referenced in place."""
+    cache = os.path.join(WORK, f"build-{digest[:16]}")
+    cp_file = os.path.join(cache, "classpath.txt")
+    if os.path.exists(cp_file):
+        with open(cp_file) as fh:
+            cp = fh.read().strip()
+        if all(os.path.exists(e) for e in cp.split(os.pathsep)):
+            return cp
+        shutil.rmtree(cache, ignore_errors=True)
     print("perfbench: building with sbt", file=sys.stderr)
     sbt_tmp = os.path.join(WORK, "sbt-tmp")  # sbt's socket and watch dirs
     os.makedirs(sbt_tmp, exist_ok=True)
@@ -96,10 +110,22 @@ def classpath(digest):
     if out.returncode != 0 or not lines or lines[-1].startswith("["):
         sys.stderr.write(out.stdout[-4000:] + out.stderr[-4000:])
         fail("build failed")
-    os.makedirs(WORK, exist_ok=True)
-    with open(cached, "w") as fh:
-        fh.write(lines[-1])
-    return lines[-1]
+    # copy into a staging dir, then rename it into place in one step
+    staging = tempfile.mkdtemp(prefix="staging-", dir=WORK)
+    entries = []
+    for i, entry in enumerate(lines[-1].split(os.pathsep)):
+        if os.path.isdir(entry):
+            shutil.copytree(entry, os.path.join(staging, f"classes-{i}"))
+            entry = os.path.join(cache, f"classes-{i}")
+        entries.append(entry)
+    cp = os.pathsep.join(entries)
+    with open(os.path.join(staging, "classpath.txt"), "w") as fh:
+        fh.write(cp)
+    try:
+        os.rename(staging, cache)
+    except OSError:  # another run cached the same digest first
+        shutil.rmtree(staging, ignore_errors=True)
+    return cp
 
 
 def git_sha():

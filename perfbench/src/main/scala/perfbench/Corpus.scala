@@ -43,6 +43,7 @@ final class Corpus(spark: SparkSession, seed: Long, root: String) extends Main.W
   private val recalls = mutable.Map.empty[String, (Int, Int)]
   /** The cold answer of the query in flight, which its warm runs must equal. */
   private var lastCold: Seq[String] = Nil
+  private val untraced = new Tracer(spark.sparkContext, enabled = false)
 
   private def writeBase(base: String): Unit = {
     // the replicator reads every table; the relational ones are one-row
@@ -121,54 +122,52 @@ final class Corpus(spark: SparkSession, seed: Long, root: String) extends Main.W
 
   private def rowsOf(q: (String, Boolean, String => DataFrame)): Long = if (q._2) nDocs else nVecs
 
-  /** Cold then warm on query `q`; the warm op is ok when its answer equals
-    * the cold one and clears the recall floor. */
-  private def coldWarm(q: (String, Boolean, String => DataFrame), t: Tracer,
-      warmKind: String): Seq[(String, () => Op)] = {
-    Seq(
-      "cold" -> (() => {
-        ArtifactCaches.clear()
-        val (rows, w) = t.span(s"operators.${q._1}.cold")(run(q))
-        lastCold = canon(rows)
-        Op(w, rowsOf(q), rows.nonEmpty)
-      }),
-      warmKind -> (() => {
-        val (rows, w) = t.span(s"operators.${q._1}.warm")(run(q))
-        val r = recall(q._1, rows)
-        r.foreach { case (h, n, _) => recalls(q._1) = (h, n) }
-        val ok = canon(rows) == lastCold && r.forall { case (h, n, floor) => h >= floor * n }
-        Op(w, rowsOf(q), ok, w)
-      }))
-  }
+  /** Query `q` right after every artifact cache is dropped; its answer is
+    * the one the warm runs must equal. */
+  private def cold(q: (String, Boolean, String => DataFrame), t: Tracer): (String, () => Op) =
+    "cold" -> (() => {
+      ArtifactCaches.clear()
+      val (rows, w) = t.span(s"operators.${q._1}.cold")(run(q))
+      lastCold = canon(rows)
+      Op(w, rowsOf(q), rows.nonEmpty)
+    })
+
+  /** Query `q` with its artifacts built; ok when the answer equals the cold
+    * one and clears the recall floor. */
+  private def warm(q: (String, Boolean, String => DataFrame), t: Tracer,
+      kind: String): (String, () => Op) =
+    kind -> (() => {
+      val (rows, w) = t.span(s"operators.${q._1}.warm")(run(q))
+      val r = recall(q._1, rows)
+      r.foreach { case (h, n, _) => recalls(q._1) = (h, n) }
+      val ok = canon(rows) == lastCold && r.forall { case (h, n, floor) => h >= floor * n }
+      Op(w, rowsOf(q), ok, w)
+    })
+
+  private def scan(t: Tracer): (String, () => Op) = "scan" -> (() => {
+    val (_, w) = time(t.span("sources.scan") {
+      Tables.documents(spark, dir).select("doc_id", "text").foreach(_ => ())
+      Tables.embeddings(spark, dir).foreach(_ => ())
+    })
+    Op(w, nDocs + nVecs, ok = true)
+  })
 
   /** One round is a full cycle over the queries, so every run measures
-    * every query: per query, cold, then warm. The warm `ann_lsh_topk` runs
-    * (20 query vectors each) are the one-item requests; there are
-    * [[OneRepeats]] of them, as each is about a second long. */
+    * every query: per query, a cold run, then [[WarmRepeats]] warm runs. The
+    * warm `ann_lsh_topk` runs (20 query vectors each) are the one-item
+    * requests. A traced round first reads the whole corpus, then runs each
+    * traced warm query between two untraced ones. */
   def round(i: Int, t: Tracer): Seq[(String, () => Op)] =
-    queries.flatMap { q =>
-      val warmKind = if (t.enabled) "traced" else if (q._1 == "ann_lsh_topk") "one" else "warm"
-      val scan = if (!t.enabled) Nil else Seq("scan" -> (() => {
-        val (_, w) = time(t.span("sources.scan") {
-          Tables.documents(spark, dir).select("doc_id", "text").foreach(_ => ())
-          Tables.embeddings(spark, dir).foreach(_ => ())
-        })
-        Op(w, nDocs + nVecs, ok = true)
-      }))
-      // the traced run pairs each traced warm run with an untraced one
-      val untraced = if (!t.enabled) Nil else Seq("warm" -> (() => {
-        val (rows, w) = run(q)
-        Op(w, rowsOf(q), canon(rows) == lastCold)
-      }))
-      val repeats = if (t.enabled || q._1 != "ann_lsh_topk") Nil
-        else Seq.fill(OneRepeats - 1)("one" -> (() => {
-          val (rows, w) = run(q)
-          Op(w, rowsOf(q), canon(rows) == lastCold)
-        }))
-      scan ++ coldWarm(q, t, warmKind) ++ untraced ++ repeats
-    }
+    if (t.enabled)
+      scan(t) +: queries.flatMap(q => Seq(cold(q, t), warm(q, untraced, "warm"),
+        warm(q, t, "traced"), warm(q, untraced, "warm")))
+    else
+      queries.flatMap { q =>
+        val kind = if (q._1 == "ann_lsh_topk") "one" else "warm"
+        cold(q, t) +: Seq.fill(WarmRepeats)(warm(q, t, kind))
+      }
 
-  val OneRepeats = 3
+  val WarmRepeats = 2
 
   private def share(names: Seq[String]): Option[Double] = {
     val rs = names.flatMap(recalls.get)

@@ -50,20 +50,6 @@ object Gen {
     (el, ion)
   }
 
-  /** `n` labelled compositions with distinct formulas (the `screen`
-    * training set and candidates). */
-  def materials(seed: Long, n: Int, prefix: String): IndexedSeq[Material] = {
-    val rnd = new scala.util.Random(seed)
-    val seen = scala.collection.mutable.HashSet.empty[String]
-    val out = ArrayBuffer.empty[Material]
-    while (out.size < n) {
-      val c = comp(rnd, maxCations = 4, maxCount = 2, maxO = 6)
-      val (el, ion) = labels(rnd, c)
-      if (seen.add(c.formula)) out += Material(f"$prefix-${out.size}%06d", c, el, ion, None)
-    }
-    out.toIndexedSeq
-  }
-
   /** Closest interatomic distance any two sites may have (Å). */
   val MinDist = 1.7
 

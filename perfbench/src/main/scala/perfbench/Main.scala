@@ -4,12 +4,13 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark entry point: one workload, one seed, a closed loop with one client
-  * for `--seconds` seconds. Prints a detail line, then the result line
-  * (`correct`, `attempted`, `failed`, `metrics`) as the last line of
-  * stdout. With `--trace 1` the metrics are the per-layer ones.
+/** Benchmark entry point: one workload, one seed, a closed loop with one
+  * client of whole rounds for at most `--seconds` seconds (at least one
+  * round). Prints a detail line, then the result line (`correct`,
+  * `attempted`, `failed`, `metrics`) as the last line of stdout. With
+  * `--trace 1` the metrics are the per-layer ones.
   *
-  * Usage: perfbench.Main --workload screen|refit|corpus --seed N
+  * Usage: perfbench.Main --workload refit|corpus --seed N
   *          --seconds S --trace 0|1 --work DIR [--launch-ms EPOCH_MS]
   *          [--source-sha HEX] [--git-sha SHA]
   */
@@ -52,16 +53,6 @@ object Main {
   /** Root-mean-square error of (prediction, label) pairs. */
   def rmse(xs: Iterable[(Double, Double)]): Double =
     math.sqrt(xs.map { case (p, y) => (p - y) * (p - y) }.sum / xs.size)
-
-  /** The highest percentile with at least ten samples beyond it, as
-    * (value, percentile). Below 20 samples that percentile would sit at or
-    * under the median, so the maximum is reported (percentile 100). */
-  def tail(xs: Seq[Double]): (Double, Double) = {
-    val s = xs.sorted
-    val n = s.length
-    if (n < 20) (s.lastOption.getOrElse(Double.NaN), 100.0)
-    else (s(n - 11), 100.0 * (n - 10) / n)
-  }
 
   /** Before each timed op: collect garbage, then wait (at most `maxMs`)
     * until the JIT compiler has been idle for 300 ms, so compilation left
@@ -116,7 +107,6 @@ object Main {
     spark.sparkContext.setLogLevel("ERROR")
 
     val wl: Workload = workloadName match {
-      case "screen" => new Screen(spark, seed)
       case "refit" => new Refit(spark, seed)
       case "corpus" => new Corpus(spark, seed, s"$work/corpus")
       case other => throw new IllegalArgumentException(s"unknown workload $other")
@@ -127,10 +117,14 @@ object Main {
 
     val tracer = new Tracer(spark.sparkContext, traced)
     val samples = scala.collection.mutable.Map.empty[String, ArrayBuffer[Op]]
-    val deadline = System.nanoTime() + (seconds * 1e9).toLong
+    // whole rounds only, so every seed measures the same work: a round
+    // starts when, at the previous round's pace, it ends by the deadline
     var i = 0
+    var roundS = 0.0
     val loopStart = System.nanoTime()
-    while (System.nanoTime() < deadline) {
+    def elapsedS = (System.nanoTime() - loopStart) / 1e9
+    while (i == 0 || elapsedS + roundS <= seconds) {
+      val roundStart = elapsedS
       wl.round(i, tracer).foreach { case (kind, run) =>
         quiesce()
         val op =
@@ -141,9 +135,10 @@ object Main {
           }
         samples.getOrElseUpdate(kind, ArrayBuffer.empty) += op
       }
+      roundS = elapsedS - roundStart
       i += 1
     }
-    val loopS = (System.nanoTime() - loopStart) / 1e9
+    val loopS = elapsedS
     val drained = tracer.drain()
     tracer.close()
 
@@ -156,12 +151,10 @@ object Main {
       .map(r => r.memSize + r.diskSize).sum / 1e6
 
     val warm = samples.getOrElse("warm", ArrayBuffer.empty[Op]).filter(_.ok)
-    val (tailV, tailPct) = tail(warm.map(_.wallS).toSeq)
     val endToEnd = Seq(
       ("setup_s", setupS, "s"),
       ("rows_per_s", warm.map(_.rows).sum / warm.map(_.wallS).sum, "rows/s"),
       ("op_p50_s", median(walls("warm")), "s"),
-      ("op_tail_s", tailV, "s"),
       ("one_p50_s", median(walls("one")), "s"),
       ("cold_op_p50_s", median(walls("cold")), "s"),
     )
@@ -182,8 +175,8 @@ object Main {
       "closed_loop_clients" -> 1,
       "loop_s" -> loopS, "rounds" -> i,
       "jvm_start_s" -> jvmS, "session_s" -> sessionS, "setup_reps_s" -> setupTimes,
-      "op_tail_percentile" -> tailPct,
       "samples" -> samples.map { case (k, v) => k -> v.size }.toMap,
+      "op_walls_s" -> samples.map { case (k, v) => k -> v.map(_.wallS).toSeq }.toMap,
       "op_fail_ratio" -> failed.toDouble / attempted,
       "cache_mb" -> storageMb,
       "trace_drained" -> drained,

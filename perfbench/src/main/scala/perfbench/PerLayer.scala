@@ -32,11 +32,14 @@ object PerLayer {
     val warmRecs = opRecs.filter(_.name.endsWith(".warm"))
     val builds = if (opRecs.isEmpty) 0.0 else opRecs.map(_.newPersisted).sum.toDouble / opRecs.size
     val reuse = if (warmRecs.isEmpty) 0.0 else warmRecs.count(_.newPersisted == 0).toDouble / warmRecs.size
-    // traced and untraced main ops run in pairs, one pair per round
-    val pairs = samples.getOrElse("traced", Nil).zip(samples.getOrElse("warm", Nil))
-      .filter { case (a, b) => a.ok && b.ok }
-    val overhead = Main.median(pairs.map { case (tr, un) => tr.wallS - un.wallS })
-    val residual = Main.median(pairs.map { case (tr, un) => un.wallS - tr.layerS })
+    // each traced op runs between two untraced runs of the same op; their
+    // mean stands for the untraced op at the traced op's place in the run
+    val around = samples.getOrElse("warm", Nil).grouped(2).toSeq
+    val triples = samples.getOrElse("traced", Nil).zip(around).collect {
+      case (tr, Seq(a, b)) if tr.ok && a.ok && b.ok => (tr, (a.wallS + b.wallS) / 2)
+    }
+    val overhead = Main.median(triples.map { case (tr, un) => tr.wallS - un })
+    val residual = Main.median(triples.map { case (tr, un) => un - tr.layerS })
     val figs = figures.toMap
     spanVals ++ Seq(
       ("operators.artifact_builds", builds, "count"),

@@ -102,12 +102,14 @@ final class Refit(spark: SparkSession, seed: Long) extends Main.Workload {
 
   /** Cold (after dropping artifact caches; in a fresh JVM the first op
     * also pays compilation), warm, then [[OneRepeats]] one-item ops on
-    * different structures. A traced round adds the traced op after the warm
-    * one, so the pair compares two compiled runs. */
+    * different structures. A traced round runs the traced op between two
+    * untraced warm ones, so comparing it with their mean cancels the JIT
+    * warm-up the three ops share. */
   def round(i: Int, t: Tracer): Seq[(String, () => Op)] =
-    Seq("cold" -> (() => { ArtifactCaches.clear(); refit(3 * i + 1, untraced) }),
-      "warm" -> (() => refit(3 * i + 2, untraced))) ++
-      (if (t.enabled) Seq("traced" -> (() => refit(3 * i + 3, t))) else Nil) ++
+    Seq("cold" -> (() => { ArtifactCaches.clear(); refit(4 * i + 1, untraced) }),
+      "warm" -> (() => refit(4 * i + 2, untraced))) ++
+      (if (t.enabled) Seq("traced" -> (() => refit(4 * i + 3, t)),
+        "warm" -> (() => refit(4 * i + 4, untraced))) else Nil) ++
       (0 until OneRepeats).map(k =>
         "one" -> (() => t.span("ml.predict_one")(scoreOne(OneRepeats * i + k))))
 

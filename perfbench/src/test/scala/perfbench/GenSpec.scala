@@ -7,29 +7,24 @@ import graft.ml.ElementData
 class GenSpec extends AnyFunSuite {
 
   private def all(seed: Long): Seq[Any] =
-    Gen.materials(seed, 200, "m") ++ Gen.database(seed, 40) ++
-      Gen.documents(seed, 300) ++ Gen.embeddings(seed, 100)
+    Gen.database(seed, 40) ++ Gen.documents(seed, 300) ++ Gen.embeddings(seed, 100)
 
   test("the same seed gives byte-identical inputs, another seed different ones") {
     assert(Gen.digest(all(11)) == Gen.digest(all(11)))
     assert(Gen.digest(all(11)) != Gen.digest(all(12)))
-    Seq(Gen.materials(11, 50, "m"), Gen.database(11, 10), Gen.documents(11, 50),
-        Gen.embeddings(11, 50)).zip(Seq(Gen.materials(12, 50, "m"), Gen.database(12, 10),
-        Gen.documents(12, 50), Gen.embeddings(12, 50))).foreach { case (a, b) =>
-      assert(Gen.digest(a) != Gen.digest(b))
-    }
+    Seq(Gen.database(11, 10), Gen.documents(11, 50), Gen.embeddings(11, 50))
+      .zip(Seq(Gen.database(12, 10), Gen.documents(12, 50), Gen.embeddings(12, 50)))
+      .foreach { case (a, b) => assert(Gen.digest(a) != Gen.digest(b)) }
   }
 
-  test("every element is in the engine's element table and formulas are distinct") {
-    val ms = Gen.materials(3, 2000, "m") ++ Gen.database(3, 200)
+  test("every element is in the engine's element table") {
+    val ms = Gen.database(3, 500)
     val elems = ms.flatMap(_.comp.elems).toSet
     assert(elems.forall(ElementData.bySymbol.contains), elems.filterNot(ElementData.bySymbol.contains))
     assert(ms.forall { m =>
       val cations = m.comp.parts.count(_._1 != "O")
-      cations >= 1 && cations <= 4 && m.comp.parts.last._1 == "O"
+      cations >= 1 && cations <= 3 && m.comp.parts.last._1 == "O"
     })
-    val screen = Gen.materials(3, 2000, "m").map(_.comp.formula)
-    assert(screen.distinct.size == screen.size)
   }
 
   test("structures keep every periodic pair at least MinDist apart") {
