@@ -27,7 +27,7 @@ WORK = os.path.join(ROOT, ".bench_build", "perfbench")
 WORKLOADS = ("refit", "corpus")
 RESULT_KEYS = {"correct", "attempted", "failed", "metrics"}
 HEAP = "3g"
-BUILD_TIMEOUT_S = 850
+BUILD_TIMEOUT_S = 700  # with the run limit, a first run ends within 900 s
 RUN_TIMEOUT_S = 170
 
 # Spark 4 on JDK 17 needs these outside spark-submit (as the engine's build sets)
@@ -98,11 +98,18 @@ def classpath(digest):
     print("perfbench: building with sbt", file=sys.stderr)
     sbt_tmp = os.path.join(WORK, "sbt-tmp")  # sbt's socket and watch dirs
     os.makedirs(sbt_tmp, exist_ok=True)
+    # sbt binds a unix socket under its temp dir; in a checkout whose path is
+    # long, that name does not fit a socket address, and sbt, taking the
+    # failed bind for another booting server, exits. forcestart lets it
+    # build without that socket. The build resolves offline, from the
+    # library cache only, whatever the calling shell sets.
+    env = dict(os.environ, COURSIER_MODE="offline")
     try:
         out = subprocess.run(
-            ["sbt", "-batch", "-Dsbt.server.autostart=false", f"-Djava.io.tmpdir={sbt_tmp}",
-             "export Runtime / fullClasspath"], cwd=BENCH,
-            stdin=subprocess.DEVNULL, capture_output=True, text=True,
+            ["sbt", "-batch", "-Dsbt.server.autostart=false", "-Dsbt.server.forcestart=true",
+             "-Dsbt.offline=true", "-Dsbt.override.build.repos=true",
+             f"-Djava.io.tmpdir={sbt_tmp}", "export Runtime / fullClasspath"], cwd=BENCH,
+            env=env, stdin=subprocess.DEVNULL, capture_output=True, text=True,
             timeout=BUILD_TIMEOUT_S)
     except subprocess.TimeoutExpired:
         fail(f"build did not finish within {BUILD_TIMEOUT_S} s")
@@ -161,7 +168,9 @@ def main():
             "--seconds", str(args.seconds), "--trace", str(args.trace),
             "--work", run_dir, "--source-sha", digest, "--git-sha", git_sha(),
             "--launch-ms", str(int(time.time() * 1000))]
-    proc = subprocess.Popen(cmd, cwd=ROOT, stdout=subprocess.PIPE, text=True)
+    # Spark binds to loopback: the run is local and needs no other interface
+    env = dict(os.environ, SPARK_LOCAL_IP="127.0.0.1")
+    proc = subprocess.Popen(cmd, cwd=ROOT, env=env, stdout=subprocess.PIPE, text=True)
     try:
         stdout, _ = proc.communicate(timeout=RUN_TIMEOUT_S)
     except subprocess.TimeoutExpired:
