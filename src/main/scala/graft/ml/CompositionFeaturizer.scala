@@ -1,20 +1,30 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
-/** Compositional featurizers (SURVEY.md §2.C C1–C5, C10; §2.D calculus 1).
+import graft.ml.RowStats.{minMax, sum}
+
+/** Compositional featurizers (SURVEY.md §2.C C1–C10; §2.D calculus 1).
   *
-  * Dataflow: composition map → explode to (id, element, fraction) →
-  * broadcast-join the static element table → ONE groupBy(id) computing every
-  * weighted statistic as partial+final aggregates — the scalable form of
-  * matminer's per-record Python loops (reference ml_prediction.py:26-37).
-  * Pairwise features (ionic character) run over a collect_list array with
-  * higher-order functions: compositions have ≤6 species, so the array is
-  * tiny and stays in the same single shuffle.
+  * Dataflow: one narrow flatMap computes each record's whole feature row
+  * in Scala — matminer's per-record loop (reference ml_prediction.py:26-37)
+  * without explode, window, join, groupBy or shuffle. A composition has ≤6
+  * species, so its row is task-local work and the plan is one stage at any
+  * input size.
   *
-  * Weighted std is population-style (√(Σf·x² − μ²)), matching matminer's
-  * PropertyStats convention (§2.D: ddof=0).
+  * Weighted std is the unbiased reliability-weight form
+  * √((Σf·x² − μ²)/(1 − Σf²)) of matminer's PropertyStats std_dev (0 for a
+  * single species).
+  *
+  * The values are bit-identical to the Spark SQL aggregate plans this
+  * replaced (FeaturizerParitySpec): every sum starts at 0.0 and runs in
+  * the map's stored order, pow/exp/log are StrictMath as in Spark's
+  * Pow/Exp/Log, min/max use Spark's double ordering, and a zero divisor
+  * raises as ANSI division does. The oxidation-state, packing-efficiency
+  * and band-edge code still sees the composition as the Scala Map a Spark
+  * UDF received, which is a HashMap in hash order past four entries.
   */
 object CompositionFeaturizer {
 
@@ -71,12 +81,9 @@ object CompositionFeaturizer {
   // table; the deviation features are smooth in the radii, so the
   // literature Miracle set applies directly (see ElementData.miracleRadius
   // for why the cluster-DISTANCE features below keep the atomic set)
-  private def apeDeviations(comp: Map[String, Double]): (Double, Double) =
-    apeDeviationsWith(comp,
-      el => ElementData.miracleRadius.getOrElse(el, ElementData.bySymbol(el).radius))
-
-  private[ml] def apeDeviationsWith(comp: Map[String, Double],
-      radiusOf: String => Double): (Double, Double) = {
+  private def apeDeviations(comp: Map[String, Double]): (Double, Double) = {
+    def radiusOf(el: String): Double =
+      ElementData.miracleRadius.getOrElse(el, ElementData.bySymbol(el).radius)
     val present = comp.filter { case (el, _) => ElementData.bySymbol.contains(el) }
     if (present.isEmpty) return (0.0, 0.0)
     val total = present.values.sum
@@ -88,6 +95,13 @@ object CompositionFeaturizer {
     val meanAbs = devs.map { case (d, w) => math.abs(d) * w }.sum
     (mean, meanAbs)
   }
+
+  /** Feature value when the composition's element set admits NO
+    * efficiently-packed cluster at all (matminer's
+    * compute_nearest_cluster_distance returns [-1]*n in that case —
+    * a sentinel, not a distance; adopting it is what reproduces the
+    * reference's heavy left tail on the dist stats). */
+  private val NoPackValue = -1.0
 
   /** C9: "dist from N clusters |APE| < 0.010" — composition-space L2
     * distance to the nearest efficiently-packed clusters buildable from
@@ -103,26 +117,13 @@ object CompositionFeaturizer {
     * keeps a running 5-smallest distance heap — O(1) memory, no cluster
     * materialization, so a 100 TB featurization run can't blow the
     * executor heap on a 6-element composition (~2M enumerations). */
-  /** Feature value when the composition's element set admits NO
-    * efficiently-packed cluster at all (matminer's
-    * compute_nearest_cluster_distance returns [-1]*n in that case —
-    * a sentinel, not a distance; adopting it is what reproduces the
-    * reference's heavy left tail on the dist stats). */
-  private[ml] val NoPackValue = -1.0
-
-  private[ml] def apeClusterDistances(comp: Map[String, Double],
-      radiusOf: String => Double = el => ElementData.bySymbol(el).radius,
-      noPack: Double = NoPackValue,
-      queryEls: Option[Seq[String]] = None): (Double, Double, Double) = {
+  private def apeClusterDistances(comp: Map[String, Double]): (Double, Double, Double) = {
     val present = comp.filter { case (el, n) => n > 0 && ElementData.bySymbol.contains(el) }
     if (present.isEmpty) return (0.0, 0.0, 0.0)
     val els = present.keys.toSeq.sorted
     val total = present.values.sum
-    // queryEls (probe-only): build the query vector's dims in a DIFFERENT
-    // element order than the cluster vectors' — the shape of matminer's
-    // sorted-elements-vs-composition-order mismatch
-    val frac = queryEls.getOrElse(els).map(e => present(e) / total).toArray
-    val r = els.map(radiusOf).toArray
+    val frac = els.map(e => present(e) / total).toArray
+    val r = els.map(e => ElementData.bySymbol(e).radius).toArray
     val k = els.length
     // bounds from the extreme center/shell radius ratios, widened by one
     // on each side: findIdealClusterSize stops at the first APE sign flip,
@@ -173,7 +174,7 @@ object CompositionFeaturizer {
     }
     var n = minN
     while (n <= maxN) { enumerate(0, n, 0.0, n); n += 1 }
-    if (best(0) == Double.MaxValue) return (noPack, noPack, noPack) // nothing packable
+    if (best(0) == Double.MaxValue) return (NoPackValue, NoPackValue, NoPackValue) // nothing packable
     val found = best.filter(_ < Double.MaxValue)
     def meanOf(m: Int): Double = {
       val take = found.take(math.min(m, found.length))
@@ -182,23 +183,13 @@ object CompositionFeaturizer {
     (meanOf(1), meanOf(3), meanOf(5))
   }
 
-  private val apeUdf = udf { (comp: Map[String, Double]) =>
-    val (m, a) = apeDeviations(comp)
-    val (d1, d3, d5) = apeClusterDistances(comp)
-    Array(m, a, d1, d3, d5)
-  }
+  private val propNames: Seq[String] = numericProps.keys.toSeq.sorted
 
-  /** C8: rigid-band HOMO/LUMO energies + gap_AO (AtomicOrbitals). */
-  private val bandEdgesUdf = udf { (comp: Map[String, Double]) =>
-    AtomicOrbitals.bandEdges(comp)
-      .map(be => Array(be.homoEnergy, be.lumoEnergy, be.gap))
-      .getOrElse(Array(0.0, 0.0, 0.0))
-  }
-
-  /** Ordered feature column names produced by featurize(). */
+  /** Ordered feature column names produced by featurize() (the model's
+    * vector order). */
   val featureColumns: Seq[String] = {
     val propStats = for {
-      p <- numericProps.keys.toSeq.sorted
+      p <- propNames
       s <- Stats
     } yield s"f_${p}_$s"
     propStats ++ Seq(
@@ -210,139 +201,137 @@ object CompositionFeaturizer {
       "f_frac_val_s", "f_frac_val_p", "f_frac_val_d") ++ oxiColumns
   }
 
-  /** Broadcast-able element property frame. `is_tm` follows matminer's
-    * TMetalFraction element list, not the d-block predicate. */
-  def elementFrame(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    ElementData.all.map { e =>
-      (e.symbol, numericProps.keys.toSeq.sorted.map(k => numericProps(k)(e)),
-        if (ElementData.tmFractionElements(e.symbol)) 1.0 else 0.0)
-    }.toDF("element", "props", "is_tm")
-  }
+  /** featurize()'s columns after the id, in the order [[featureRow]]
+    * emits them. */
+  private val outputColumns: Seq[String] =
+    featureColumns.take(propNames.size * Stats.size) ++ Seq(
+      "f_frac_tm", "f_band_center", "f_nelements", "f_avg_ionic_char", "f_max_ionic_char",
+      "f_norm2", "f_norm3", "f_norm5", "f_norm7",
+      "f_frac_val_s", "f_frac_val_p", "f_frac_val_d") ++
+      oxiColumns ++ Seq("f_homo_energy", "f_lumo_energy", "f_gap_ao")
 
-  /** Per-element row for the oxidation-state featurizers: the guesser
-    * (C12) runs once per composition in a UDF; stats aggregate in Spark. */
-  final case class OxiRow(element: String, cnt: Double, state: Double, endiff: Option[Double])
-
-  private val oxiRows = udf { (comp: Map[String, Double]) =>
-    val states = OxidationStates.guess(comp)
-    val enO = ElementData.bySymbol("O").en
-    comp.toSeq.map { case (el, cnt) =>
-      OxiRow(el, cnt, states.getOrElse(el, 0.0),
-        ElementData.bySymbol.get(el).filter(_ => el != "O").map(p => enO - p.en))
+  /** Per element: the `propNames` values, then 1.0 if it counts toward
+    * matminer's TMetalFraction list (not the d-block predicate). */
+  private val elementRow: Map[String, Array[Double]] =
+    ElementData.bySymbol.map { case (sym, e) =>
+      sym -> (propNames.map(p => numericProps(p)(e)) :+
+        (if (ElementData.tmFractionElements(sym)) 1.0 else 0.0)).toArray
     }
+
+  private val enIdx = propNames.indexOf("en")
+
+  /** Division that raises on a zero divisor, as Spark's ANSI division does:
+    * counts that sum to zero, a composition with no cation in the element
+    * table, or one without valence electrons have no features. */
+  private def div(a: Double, b: Double): Double =
+    if (b == 0.0) throw new ArithmeticException(
+      "[DIVIDE_BY_ZERO] composition features need counts with a nonzero sum, " +
+        "a cation from the element table and valence electrons")
+    else a / b
+
+  /** Weighted std over weights with Σw² = `w2` (see the object doc). */
+  private def unbiasedStd(variance: Double, w2: Double): Double =
+    if (w2 > 0.999999) 0.0
+    else {
+      val v = div(variance, 1.0 - w2)
+      math.sqrt(if (RowStats.lt(v, 0.0)) 0.0 else v)
+    }
+
+  /** One composition's features in `outputColumns` order; `els` and `cnts`
+    * are the map's entries in stored order. */
+  private def featureRow(els: Seq[String], cnts: Seq[Double]): Array[Double] = {
+    // the oxidation-state, packing and band-edge code reads the composition
+    // as a Spark UDF received it; the oxidation stats go first because they
+    // raise for a composition with no cation in the element table
+    val comp = els.zip(cnts).toMap
+    val oxi = oxiStats(comp)
+    // elements outside the table drop out of every stat but the total
+    val total = sum(cnts.size)(cnts)
+    val fracs = cnts.map(div(_, total))
+    val known = els.indices.filter(i => elementRow.contains(els(i)))
+    val f = known.map(fracs).toArray
+    val x = known.map(i => elementRow(els(i))).toArray
+    val k = f.length
+
+    val out = Array.newBuilder[Double]
+    val w2 = sum(k)(i => f(i) * f(i))
+    val wmeans = propNames.indices.map { p =>
+      val wmean = sum(k)(i => f(i) * x(i)(p))
+      val (mn, mx) = minMax(k)(i => x(i)(p))
+      out ++= Seq(wmean, unbiasedStd(sum(k)(i => f(i) * x(i)(p) * x(i)(p)) - wmean * wmean, w2),
+        mn, mx, mx - mn)
+      propNames(p) -> wmean
+    }.toMap
+    out += sum(k)(i => f(i) * x(i)(propNames.size)) // f_frac_tm
+    // matminer BandCenter: NEGATED geometric mean of electronegativity
+    // (an absolute band-center position estimate — confirmed against the
+    // shipped scaler mean, which is exactly −our geo-mean)
+    out += -StrictMath.exp(sum(k)(i => f(i) * StrictMath.log(x(i)(enIdx))))
+    out += k.toDouble // f_nelements
+    // ionic character over ordered pairs (the diagonal is 0); matminer
+    // sums unordered pairs i<j, hence the ÷2 — confirmed exactly 2x the
+    // scaler mean
+    val ionic = (i: Int) => {
+      val (a, b) = (i / k, i % k)
+      f(a) * f(b) * (1.0 - StrictMath.exp(-0.25 * StrictMath.pow(x(a)(enIdx) - x(b)(enIdx), 2.0)))
+    }
+    out ++= Seq(sum(k * k)(ionic) / 2.0, minMax(k * k)(ionic)._2)
+    for (p <- Seq(2, 3, 5, 7))
+      out += StrictMath.pow(sum(k)(i => StrictMath.pow(f(i), p.toDouble)), 1.0 / p)
+    val valTotal = wmeans("val_s") + wmeans("val_p") + wmeans("val_d") + wmeans("val_f")
+    out ++= Seq("val_s", "val_p", "val_d").map(p => div(wmeans(p), valTotal))
+    out ++= oxi
+    val (apeMean, apeAbs) = apeDeviations(comp)
+    val (d1, d3, d5) = apeClusterDistances(comp)
+    out ++= Seq(apeMean, apeAbs, d1, d3, d5)
+    // C8: rigid-band HOMO/LUMO energies + gap_AO (AtomicOrbitals)
+    out ++= AtomicOrbitals.bandEdges(comp)
+      .map(be => Seq(be.homoEnergy, be.lumoEnergy, be.gap)).getOrElse(Seq(0.0, 0.0, 0.0))
+    out.result()
   }
 
-  /** C6/C7: weighted oxidation-state stats + cation-anion EN-difference
-    * stats (anion = O in this corpus), one groupBy over the exploded
-    * per-element rows. */
-  def oxiFeatures(df: DataFrame, idCol: String, compCol: String): DataFrame = {
-    val exploded = df
-      .select(col(idCol), explode(oxiRows(col(compCol))).as("r"))
-      .select(col(idCol), col("r.cnt").as("cnt"), col("r.state").as("state"),
-        col("r.endiff").as("endiff"))
-      .withColumn("w", col("cnt") / sum("cnt").over(
-        org.apache.spark.sql.expressions.Window.partitionBy(idCol)))
-    val wmeanSt = sum(col("w") * col("state")) / sum(col("w"))
-    val cw = when(col("endiff").isNotNull, col("cnt")).otherwise(lit(0.0))
-    val wmeanEd = sum(cw * col("endiff")) / sum(cw)
-    // both stds use the unbiased reliability-weight denominator 1 − Σw²
-    // (same matminer PropertyStats convention as the element stats)
-    val w2St = sum(col("w") * col("w"))
-    val w2Ed = sum(cw * cw) / (sum(cw) * sum(cw))
-    def unb(variance: Column, w2: Column): Column =
-      when(w2 > 0.999999, lit(0.0))
-        .otherwise(sqrt(greatest(variance / (lit(1.0) - w2), lit(0.0))))
-    exploded.groupBy(col(idCol)).agg(
-      min("state").as("f_oxi_min"),
-      max("state").as("f_oxi_max"),
-      (max("state") - min("state")).as("f_oxi_range"),
-      unb(sum(col("w") * col("state") * col("state")) - wmeanSt * wmeanSt, w2St)
-        .as("f_oxi_std"),
-      wmeanEd.as("f_endiff_mean"),
-      unb(sum(cw * col("endiff") * col("endiff")) / sum(cw) - wmeanEd * wmeanEd, w2Ed)
-        .as("f_endiff_std"),
-      min("endiff").as("f_endiff_min"),
-      max("endiff").as("f_endiff_max"),
-      (max("endiff") - min("endiff")).as("f_endiff_range"))
+  /** C7 weighted oxidation-state stats (states from the C12 guesser) and
+    * C6 cation–anion electronegativity-difference stats (anion = O in
+    * this corpus), in `oxiColumns` order up to f_endiff_range. The state
+    * stats weigh every entry, an element outside the table with state 0;
+    * the difference stats weigh the cations in the table by their counts. */
+  private def oxiStats(comp: Map[String, Double]): Seq[Double] = {
+    val states = OxidationStates.guess(comp)
+    val (els, cnt) = comp.toArray.unzip
+    val n = els.length
+    val st = els.map(states.getOrElse(_, 0.0))
+    val cntSum = sum(n)(cnt(_))
+    val w = cnt.map(div(_, cntSum))
+    val stMean = div(sum(n)(i => w(i) * st(i)), sum(n)(w(_)))
+    val stStd = unbiasedStd(sum(n)(i => w(i) * st(i) * st(i)) - stMean * stMean,
+      sum(n)(i => w(i) * w(i)))
+    val (stMin, stMax) = minMax(n)(st(_))
+
+    val enO = ElementData.bySymbol("O").en
+    val cations = els.indices.filter(i => els(i) != "O" && ElementData.bySymbol.contains(els(i)))
+    val m = cations.size
+    val cw = cations.map(cnt)
+    val ed = cations.map(i => enO - ElementData.bySymbol(els(i)).en)
+    val cwSum = sum(m)(cw)
+    val edMean = div(sum(m)(i => cw(i) * ed(i)), cwSum)
+    val edStd = unbiasedStd(div(sum(m)(i => cw(i) * ed(i) * ed(i)), cwSum) - edMean * edMean,
+      div(sum(m)(i => cw(i) * cw(i)), cwSum * cwSum))
+    val (edMin, edMax) = minMax(m)(ed)
+    Seq(stMin, stMax, stMax - stMin, stStd, edMean, edStd, edMin, edMax, edMax - edMin)
   }
 
   /** Featurize a frame of (idCol, composition Map[String,Double] counts):
-    * one row per id with `featureColumns`. */
+    * one row per id with a non-empty composition — the id, then every
+    * feature column. */
   def featurize(spark: SparkSession, df: DataFrame, idCol: String, compCol: String): DataFrame = {
-    val propNames = numericProps.keys.toSeq.sorted
-
-    val exploded = df
-      .select(col(idCol), explode(col(compCol)).as(Seq("element", "cnt")))
-      .withColumn("total", sum("cnt").over(
-        org.apache.spark.sql.expressions.Window.partitionBy(idCol)))
-      .withColumn("f", col("cnt") / col("total"))
-      .join(broadcast(elementFrame(spark)), Seq("element"))
-
-    // per-property weighted aggregates, all in one groupBy pass.
-    // Weighted std uses the UNBIASED reliability-weight denominator
-    // 1 − Σw² (matminer PropertyStats std_dev convention — confirmed to
-    // <1% against the reference's shipped scaler vectors; the population
-    // form σ_pop = √(Σw·x² − μ²) sits a uniform ~25% low). Σw² = 1 for a
-    // single-element composition → std defined as 0.
-    val w2 = sum(col("f") * col("f"))
-    def wstd(sumWx2: Column, wmean: Column): Column =
-      when(w2 > 0.999999, lit(0.0))
-        .otherwise(sqrt(greatest((sumWx2 - wmean * wmean) / (lit(1.0) - w2), lit(0.0))))
-    val aggExprs: Seq[Column] = propNames.zipWithIndex.flatMap { case (p, i) =>
-      val x = col("props").getItem(i)
-      val wmean = sum(col("f") * x)
-      Seq(
-        wmean.as(s"f_${p}_wmean"),
-        wstd(sum(col("f") * x * x), wmean).as(s"f_${p}_wstd"),
-        min(x).as(s"f_${p}_min"),
-        max(x).as(s"f_${p}_max"),
-        (max(x) - min(x)).as(s"f_${p}_range"))
-    } ++ Seq(
-      sum(col("f") * col("is_tm")).as("f_frac_tm"),
-      // matminer BandCenter: NEGATED geometric mean of electronegativity
-      // (an absolute band-center position estimate — confirmed against
-      // the shipped scaler mean, which is exactly −our geo-mean)
-      (-exp(sum(col("f") * log(col("props").getItem(propNames.indexOf("en")))))).as("f_band_center"),
-      collect_list(struct(col("f").as("f"),
-        col("props").getItem(propNames.indexOf("en")).as("en"))).as("_pairs"),
-      aggregate(collect_list(pow(col("f"), 2)), lit(0.0), _ + _).as("_s2"),
-      aggregate(collect_list(pow(col("f"), 3)), lit(0.0), _ + _).as("_s3"),
-      aggregate(collect_list(pow(col("f"), 5)), lit(0.0), _ + _).as("_s5"),
-      aggregate(collect_list(pow(col("f"), 7)), lit(0.0), _ + _).as("_s7"),
-      count(lit(1)).cast("double").as("f_nelements"))
-
-    val ionicTerms = flatten(transform(col("_pairs"), a =>
-      transform(col("_pairs"), b =>
-        a.getField("f") * b.getField("f") *
-          (lit(1.0) - exp(lit(-0.25) * pow(a.getField("en") - b.getField("en"), 2))))))
-
-    val main = exploded.groupBy(col(idCol))
-      .agg(aggExprs.head, aggExprs.tail: _*)
-      // ÷2: matminer sums UNORDERED pairs i<j; ionicTerms enumerates both
-      // orders (diagonal is 0) — confirmed exactly 2x the scaler mean
-      .withColumn("f_avg_ionic_char", aggregate(ionicTerms, lit(0.0), _ + _) / 2)
-      .withColumn("f_max_ionic_char", array_max(ionicTerms))
-      .withColumn("f_norm2", pow(col("_s2"), 1.0 / 2))
-      .withColumn("f_norm3", pow(col("_s3"), 1.0 / 3))
-      .withColumn("f_norm5", pow(col("_s5"), 1.0 / 5))
-      .withColumn("f_norm7", pow(col("_s7"), 1.0 / 7))
-      .withColumn("_val_tot", col("f_val_s_wmean") + col("f_val_p_wmean") +
-        col("f_val_d_wmean") + col("f_val_f_wmean"))
-      .withColumn("f_frac_val_s", col("f_val_s_wmean") / col("_val_tot"))
-      .withColumn("f_frac_val_p", col("f_val_p_wmean") / col("_val_tot"))
-      .withColumn("f_frac_val_d", col("f_val_d_wmean") / col("_val_tot"))
-      .drop("_pairs", "_s2", "_s3", "_s5", "_s7", "_val_tot")
-    val ape = df.select(col(idCol), apeUdf(col(compCol)).as("_ape"),
-        bandEdgesUdf(col(compCol)).as("_be"))
-      .select(col(idCol), col("_ape").getItem(0).as("f_ape_mean"),
-        col("_ape").getItem(1).as("f_ape_absdev"),
-        col("_ape").getItem(2).as("f_ape_dist1"),
-        col("_ape").getItem(3).as("f_ape_dist3"),
-        col("_ape").getItem(4).as("f_ape_dist5"),
-        col("_be").getItem(0).as("f_homo_energy"),
-        col("_be").getItem(1).as("f_lumo_energy"),
-        col("_be").getItem(2).as("f_gap_ao"))
-    main.join(oxiFeatures(df, idCol, compCol), Seq(idCol)).join(ape, Seq(idCol))
+    // nullability as the aggregate plans declared it: only the count is non-null
+    val schema = StructType(df.schema(idCol) +: outputColumns.map(c =>
+      StructField(c, DoubleType, nullable = c != "f_nelements")))
+    df.select(col(idCol), map_keys(col(compCol)), map_values(col(compCol)))
+      .flatMap { r =>
+        val els = if (r.isNullAt(1)) Nil else r.getSeq[String](1)
+        if (els.isEmpty) None
+        else Some(Row.fromSeq(r.get(0) +: featureRow(els, r.getSeq[Double](2)).toSeq))
+      }(Encoders.row(schema))
   }
 }

@@ -78,12 +78,11 @@ object DielectricModel {
     * joined in for comp_st — both sides key on mp_id, one shuffle each). */
   def featurizedTraining(spark: SparkSession, diel: DielectricType,
       mt: ModelType = Comp): DataFrame = {
-    // slot-materialized per (diel, mt): the featurize pipelines are the
-    // heaviest plans in the ml family (150-column weighted aggregates,
-    // Voronoi/Ewald lambdas) and one train+predict pass otherwise
-    // re-executes them 3×+ (scaler fit, RF input, prediction transform),
-    // while the golden-parity export, ml_el_comp_pred and the scaler
-    // drift report each re-derived the same frame from scratch
+    // slot-materialized per (diel, mt): the structure featurization runs
+    // the Voronoi/Ewald kernels, and one train+predict pass otherwise
+    // re-executes the featurizers 3×+ (scaler fit, RF input, prediction
+    // transform), while the golden-parity export, ml_el_comp_pred and the
+    // scaler drift report each re-derived the same frame from scratch
     // (r9 optimization round: the three were the slowest rows of the
     // full-surface [vtime] sweep)
     graft.operators.PersistSlots.cached(spark, s"ml-feat:${diel.key}:${mt.key}") {
@@ -133,6 +132,7 @@ object DielectricModel {
   def predictFormulas(spark: SparkSession, model: PipelineModel,
       formulas: Seq[String]): DataFrame = {
     import spark.implicits._
+    formulas.foreach(f => requireKnownElements(FormulaParser.parse(f).keys, f))
     val base = formulas.toDF("formula")
       .withColumn("comp", FormulaParser.parseFormula(col("formula")))
     val feats = CompositionFeaturizer.featurize(spark, base, "formula", "comp")
@@ -242,9 +242,9 @@ object DielectricModel {
   }
 
   /** CLI inputs can contain arbitrary elements; the featurizers silently
-    * drop anything outside the 51-element corpus table (broadcast inner
-    * join, band-edge filter), which would turn an Fe₂O₃ request into a
-    * confident prediction for plain O. Fail loudly instead. */
+    * drop anything outside the 51-element corpus table from their stats,
+    * which would turn an Fe₂O₃ request into a confident prediction for
+    * plain O. Fail loudly instead. */
   private def requireKnownElements(elems: Iterable[String], source: String): Unit = {
     val unknown = elems.filterNot(ElementData.bySymbol.contains).toSeq.sorted
     if (unknown.nonEmpty)

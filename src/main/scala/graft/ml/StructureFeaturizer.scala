@@ -1,20 +1,28 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 import graft.materials.{Ewald, Geometry, Materials}
 import graft.materials.Geometry.Lattice
+import graft.ml.RowStats.{minMax, stddevPop, sum}
 
 /** Structural (site-based) featurizers — SURVEY.md §2.C C11/C13/C14-lite/
   * C17/C18 over the periodic-geometry kernels.
   *
-  * Dataflow: one typed map over materials runs the per-site kernels
-  * (neighbor list, Gaussian symmetry functions, Ewald) inside
-  * mapPartitions — amortized setup, embarrassingly parallel across
-  * materials, zero shuffle — and emits per-site feature vectors; Spark then
-  * explodes sites and aggregates per material with max/avg/min/stddev_pop,
-  * the SiteFeaturizer reduction calculus (§2.D; np.std is population std).
+  * Dataflow: one typed flatMap over materials runs the per-site kernels
+  * (neighbor list, Gaussian symmetry functions, Ewald, Voronoi) and then
+  * reduces the sites to the material's feature row with the SiteFeaturizer
+  * calculus (§2.D: mean, population std as np.std, min, max) in the same
+  * task — embarrassingly parallel across materials, no explode, groupBy or
+  * join. The only shuffle is the repartition that spreads the CPU-heavy
+  * kernels over the cluster.
+  *
+  * The reductions reproduce Spark's avg/stddev_pop/min/max bit for bit
+  * (FeaturizerParitySpec): sums start at 0.0 in site order, the std runs
+  * Spark's CentralMomentAgg update, and min/max use Spark's double
+  * ordering.
   */
 object StructureFeaturizer {
 
@@ -258,7 +266,8 @@ object StructureFeaturizer {
       in.sg_number.toDouble, n.toDouble, anis, angleDev, sites)
   }
 
-  /** Per-site fields reduced with the §2.D calculus. */
+  /** Per-site fields reduced with the §2.D calculus, in SiteFeatures
+    * field order (featureRow reads the sites positionally). */
   val siteFields: Seq[String] = Seq(
     "min_dist", "min_rel_dist", "nbr_dist_var", "g2_a", "g2_b", "g2_c", "g2_d", "ewald",
     "voro_vol", "voro_nfaces", "voro_area_mean", "voro_area_std",
@@ -272,18 +281,19 @@ object StructureFeaturizer {
     "op_tet", "op_oct", "op_lin", "op_tri", "op_sqp", "op_ssw",
     "op_sgl", "op_bent150", "op_pent", "op_q6", "g4_pos", "g4_neg")
 
-  /** Ordered structural feature columns. */
-  val featureColumns: Seq[String] = {
-    val siteAggs = for {
+  private val siteAggColumns: Seq[String] =
+    for {
       f <- siteFields
       a <- Seq("mean", "std", "min", "max")
     } yield s"s_${f}_$a"
-    Seq("s_density", "s_vpa", "s_packing", "s_sg_number", "s_nsites",
-      "s_lat_anis", "s_lat_angle_dev", "s_voro_bond_var_avgdev") ++ siteAggs
-  }
 
-  /** Featurize the materials frame: kernels in a typed mapPartitions, then
-    * explode(sites) + groupBy(mp_id) with the §2.D aggregate calculus. */
+  private val materialColumns: Seq[String] = Seq("s_density", "s_vpa", "s_packing",
+    "s_sg_number", "s_nsites", "s_lat_anis", "s_lat_angle_dev", "s_voro_bond_var_avgdev")
+
+  /** Ordered structural feature columns (the model's vector order). */
+  val featureColumns: Seq[String] = materialColumns ++ siteAggColumns
+
+  /** Featurize the materials frame (see featurizeStructs). */
   def featurize(spark: SparkSession, materials: DataFrame): DataFrame = {
     import spark.implicits._
     featurizeStructs(spark, materials.select(
@@ -296,40 +306,37 @@ object StructureFeaturizer {
       col("nsites")).as[StructIn])
   }
 
-  /** Featurize raw StructIn rows (e.g. POSCAR-derived structures). */
+  /** Featurize raw StructIn rows (e.g. POSCAR-derived structures): one row
+    * per material with at least one site — mp_id, the four reductions of
+    * every site field, then the per-material columns. */
   def featurizeStructs(spark: SparkSession,
       in: org.apache.spark.sql.Dataset[StructIn]): DataFrame = {
-    import spark.implicits._
     // size the CPU-heavy kernel stage to the cluster, NOT to however the
     // input landed (the JSON ingest coalesces to 4 partitions; a
     // single-file parquet read is 1): the shuffle of this tiny frame is
     // noise next to the Voronoi/Ewald cost it parallelizes
     val par = spark.sparkContext.defaultParallelism
-    val out = in.repartition(par).mapPartitions(_.map(featurizeOne)).toDF()
+    val schema = StructType(StructField("mp_id", StringType) +:
+      (siteAggColumns ++ materialColumns).map(StructField(_, DoubleType)))
+    in.repartition(par).flatMap(s => featureRow(featurizeOne(s)))(Encoders.row(schema))
+  }
 
-    // avg_dev (mean absolute deviation) reduction for the bond-length
-    // variation — StructuralHeterogeneity's second reducer. Computed as
-    // two higher-order-function passes over the still-arrayed sites
-    // (mean, then mean |x − mean|): no extra shuffle, stays in codegen.
-    val bv = transform(col("sites"), s => s.getField("voro_bond_var"))
-    val bvMean = aggregate(bv, lit(0.0), _ + _) / size(bv)
-    val withAvgDev = out.withColumn("bond_var_avgdev",
-      aggregate(bv, lit(0.0), (acc, x) => acc + abs(x - bvMean)) / size(bv))
-
-    val perSite = withAvgDev.select(col("mp_id"), col("density"), col("vpa"), col("packing"),
-      col("sg_number"), col("nsites_d"), col("lat_anis"), col("lat_angle_dev"),
-      col("bond_var_avgdev"), explode(col("sites")).as("sf"))
-
-    val aggs = siteFields.flatMap { f =>
-      val x = col("sf").getField(f)
-      Seq(avg(x).as(s"s_${f}_mean"), stddev_pop(x).as(s"s_${f}_std"),
-        min(x).as(s"s_${f}_min"), max(x).as(s"s_${f}_max"))
-    } ++ Seq(first("density").as("s_density"), first("vpa").as("s_vpa"),
-      first("packing").as("s_packing"), first("sg_number").as("s_sg_number"),
-      first("nsites_d").as("s_nsites"),
-      first("lat_anis").as("s_lat_anis"), first("lat_angle_dev").as("s_lat_angle_dev"),
-      first("bond_var_avgdev").as("s_voro_bond_var_avgdev"))
-
-    perSite.groupBy("mp_id").agg(aggs.head, aggs.tail: _*)
+  /** Reduce one material's sites to its feature row; None without sites. */
+  private def featureRow(o: StructOut): Option[Row] = {
+    val n = o.sites.size
+    if (n == 0) return None
+    val sites = o.sites.map(_.productIterator.map(_.asInstanceOf[Double]).toArray)
+    val siteAggs = siteFields.indices.flatMap { f =>
+      val x = (i: Int) => sites(i)(f)
+      val (mn, mx) = minMax(n)(x)
+      Seq(sum(n)(x) / n, stddevPop(n)(x), mn, mx)
+    }
+    // avg_dev (mean absolute deviation) of the bond-length variation —
+    // StructuralHeterogeneity's second reducer
+    val bv = o.sites.map(_.voro_bond_var)
+    val bvMean = sum(n)(bv) / n
+    val bvAvgDev = sum(n)(i => math.abs(bv(i) - bvMean)) / n
+    Some(Row.fromSeq(o.mp_id +: siteAggs ++: Seq(o.density, o.vpa, o.packing, o.sg_number,
+      o.nsites_d, o.lat_anis, o.lat_angle_dev, bvAvgDev)))
   }
 }

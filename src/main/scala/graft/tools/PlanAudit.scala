@@ -19,7 +19,7 @@ import graft.SparkEntry
 object PlanAudit {
 
   /** All physical nodes, descending through AQE wrappers and stages. */
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
+  private[graft] def allNodes(p: SparkPlan): Seq[SparkPlan] = {
     val kids = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
       case s: QueryStageExec        => Seq(s.plan)

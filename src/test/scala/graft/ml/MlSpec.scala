@@ -219,6 +219,21 @@ class MlSpec extends SparkSpec {
     assert(ex.getMessage.contains("Fe"))
   }
 
+  test("predictFormulas refuses a formula with an element outside the table") {
+    import spark.implicits._
+    import DielectricModel._
+    val base = Seq("SiO2", "TiO2", "MgO", "Al2O3", "ZnO", "BaTiO3").zipWithIndex
+      .map { case (f, i) => (f, FormulaParser.parse(f), 0.1 * i) }
+      .toDF("formula", "comp", "label")
+    val feats = CompositionFeaturizer.featurize(spark, base, "formula", "comp")
+      .join(base.select("formula", "label"), Seq("formula"))
+    val model = pipeline(Comp, numTrees = 2, maxDepth = 2).fit(feats)
+    assert(predictFormulas(spark, model, Seq("SiO2")).count() == 1)
+    // Fe would drop out of every stat and leave a prediction for plain O
+    val ex = intercept[IllegalArgumentException](predictFormulas(spark, model, Seq("Fe2O3")))
+    assert(ex.getMessage.contains("Fe"))
+  }
+
   test("CLI semantics: accepts both spellings, rejects junk") {
     import DielectricModel._
     assert(DielectricType.parse("el") == Electronic)
