@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line for the driver (BENCH_r{N}.json).
   *
@@ -21,19 +19,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the PersistSlots.cachedCheckpoint contract (q33's lineage-cut
-      // edge build): checkpointed builds' shuffle files are reclaimed by
-      // the ContextCleaner at driver GC — the default 30 min periodic GC
-      // never fires inside a run, leaving reclamation to incidental GCs
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt)
 
     // export-gate queries bench their raw form (the gate is oracle
     // harness, not workload — and its export input may not exist here)

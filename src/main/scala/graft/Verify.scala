@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,17 +10,7 @@ object Verify {
     val wanted: String => Boolean =
       if (only.isEmpty) _ => true else only.toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the PersistSlots.cachedCheckpoint contract: lineage-cut builds'
-      // shuffle files are reclaimed at driver GC (default periodic GC is
-      // 30 min — never inside a run)
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // every export timed to stderr ([vtime] lines — NOT the [verify]
     // failure tag) so a slow round is diagnosable from the driver log
@@ -66,8 +55,11 @@ object Verify {
     // jobs). 3 keeps peak memory bounded; FIFO scheduling gives the
     // back-fill behavior. PersistSlots builds are per-key locked, so
     // concurrent dumps share artifacts instead of double-building them.
+    // daemon threads: a query hung in driver-side code cannot keep the
+    // JVM alive after main returns
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "3").toInt)
+      sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "3").toInt,
+      (r: Runnable) => { val t = new Thread(r, "verify-query"); t.setDaemon(true); t })
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     val futs = SparkEntry.queries.filter(q => wanted(q._1)).toSeq.map { case (name, fn) =>
@@ -95,8 +87,8 @@ object Verify {
     // healthy pass pays nothing.
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_VERIFY_TIMEOUT", "900").toLong
     import scala.concurrent.duration._
-    futs.foreach { case (name, f) =>
-      try scala.concurrent.Await.result(f, timeoutSec.seconds)
+    val timedOut = futs.flatMap { case (name, f) =>
+      try { scala.concurrent.Await.result(f, timeoutSec.seconds); None }
       catch {
         case _: java.util.concurrent.TimeoutException =>
           System.err.println(
@@ -105,9 +97,18 @@ object Verify {
           // bounded grace for the cancellation to unwind the future
           try scala.concurrent.Await.result(f, 60.seconds)
           catch { case _: Throwable => () }
+          Some(name)
       }
     }
-    pool.shutdown()
+    pool.shutdownNow()
+    pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+    // a timed-out query may still have finished its write in the grace
+    // period: delete its output, so the oracle row reads "spark output
+    // missing" (FAIL) and agrees with the timeout in the log
+    timedOut.foreach { name =>
+      val dir = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

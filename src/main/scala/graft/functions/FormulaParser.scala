@@ -58,7 +58,6 @@ object FormulaParser {
   }
 
   val parseFormula = udf((f: String) => if (f == null) null else parse(f))
-  val formulaFractions = udf((f: String) => if (f == null) null else fractions(f))
 
   def apply(formula: Column): Column = parseFormula(formula)
 }

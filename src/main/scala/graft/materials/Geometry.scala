@@ -265,22 +265,6 @@ object Geometry {
   private def dotv(a: Array[Double], b: Array[Double]): Double =
     a(0) * b(0) + a(1) * b(1) + a(2) * b(2)
 
-  /** Per-site minimum neighbor distance (periodic). Expands the cutoff
-    * until every site has at least one neighbor. */
-  def minDistances(lat: Lattice, frac: Array[Array[Double]]): Array[Double] = {
-    var cutoff = math.max(4.0, lat.planeSpacings.min * 1.01)
-    var mins: Array[Double] = null
-    var done = false
-    while (!done) {
-      val nl = neighborList(lat, frac, cutoff)
-      val m = Array.fill(frac.length)(Double.MaxValue)
-      nl.foreach(n => if (n.dist < m(n.siteIdx)) m(n.siteIdx) = n.dist)
-      if (m.forall(_ < Double.MaxValue)) { mins = m; done = true }
-      else cutoff *= 1.6
-    }
-    mins
-  }
-
   // ---- small vector helpers --------------------------------------------
 
   def det3(m: Array[Array[Double]]): Double =

@@ -25,55 +25,32 @@ package graft.materials
   * frame puts one neighbor at the pole and one on the x-axis, scores the
   * polar angles of the others against the motif's ideal angles and their
   * azimuths against the motif's rotational symmetry, and the site takes
-  * the best frame. The inverse Gaussian width (`IgwTa`) is calibrated
+  * the best frame. The inverse Gaussian widths (`Igw*`) are calibrated
   * against the reference's shipped StandardScaler statistics — the same
   * numeric-parity oracle the other discovered conventions use.
   */
 object OpFingerprint {
 
-  /** Motif-Gaussian parameter set.
-    *
-    * Inverse Gaussian widths for the polar-angle penalties, in 1/(theta/pi)
-    * units (sigma = pi/IGW), per motif — matminer ships per-motif parameter
-    * sets (cn_motif_op_params), and the defaults here are calibrated against
-    * the shipped scaler statistics of the labeled components (the same
-    * numeric-parity oracle the other discovered conventions use; the
-    * octahedral family pins EXACTLY at the paper's 0.0667π width, i.e.
-    * IGW = 1/0.0667 — both its stats inside 0.2%).
-    *
-    * Calibration is FROZEN: production featurization always uses
-    * [[Calibrated]]; the calibration probe (tools.OpScan) constructs
-    * variant instances and threads them through explicitly — no mutable
-    * global state to corrupt a run (and no local-mode-only mutation
-    * visible from mapPartitions).
-    */
-  final case class OpParams(
-      IgwBent150: Double = 12.0,
-      IgwLin: Double = 9.0,
-      IgwTriPlan: Double = 7.0,
-      IgwTet: Double = 20.0,
-      IgwPentPlan: Double = 7.0,
-      // equatorial-plane and south-pole widths (octahedral + see-saw family)
-      IgwEp: Double = 14.99250374812594, // = 1/0.0667, Zimmermann 2017
-      IgwSpp: Double = 14.99250374812594,
-      // azimuthal Gaussian width for the see-saw rectangle (its equatorial
-      // pair sits at 90 degrees, which no cos(k*phi)^2 factor can reward
-      // while penalizing the square-planar 180-degree pair)
-      IgwAa: Double = 11.46,
-      // see-saw's own equatorial width (oct's is pinned exactly by its own
-      // two scaler stats; see-saw calibrates independently)
-      IgwSswEp: Double = 18.0,
-      // south-pole weight (octahedral family)
-      WSpp: Double = 3.0,
-      // calibration switches: see-saw azimuth form (0 = 90°-centered
-      // Gaussian, 1 = cos^2(2*phi) like the octahedral ring) and the
-      // tet/tri azimuthal cosine exponent
-      SswMode: Int = 3,
-      TetExpCos: Int = 2,
-      TetMode: Int = 1)
-
-  /** The calibrated production parameter set (see OpParams scaladoc). */
-  val Calibrated: OpParams = OpParams()
+  // Inverse Gaussian widths for the polar-angle penalties, in 1/(theta/pi)
+  // units (sigma = pi/IGW), per motif. matminer ships per-motif parameter
+  // sets (cn_motif_op_params); these were calibrated once against the
+  // shipped scaler statistics of the labeled components (the same
+  // numeric-parity oracle the other discovered conventions use) and are
+  // frozen. The octahedral family pins EXACTLY at the paper's 0.0667π
+  // width, i.e. IGW = 1/0.0667, both its stats inside 0.2%.
+  val IgwBent150 = 12.0
+  val IgwLin = 9.0
+  val IgwTriPlan = 7.0
+  val IgwTet = 20.0
+  val IgwPentPlan = 7.0
+  // equatorial-plane and south-pole widths (octahedral + see-saw family)
+  val IgwEp = 14.99250374812594 // = 1/0.0667, Zimmermann 2017
+  val IgwSpp = 14.99250374812594
+  // see-saw's own equatorial width (oct's is pinned exactly by its own
+  // two scaler stats; see-saw calibrates independently)
+  val IgwSswEp = 18.0
+  // south-pole weight (octahedral family)
+  val WSpp = 3.0
 
   // south-pole presence threshold (octahedral family)
   val MinSpp = 2.792526803190927 // 160 degrees
@@ -91,8 +68,7 @@ object OpFingerprint {
   /** All sites of a material: matminer grows an integer radius from 7 Å
     * until a site has ≥ 12 neighbors; the radius is PER SITE, so a dense
     * site keeps its 7 Å set even when a sparse one needs 9. */
-  def material(lat: Geometry.Lattice, frac: Array[Array[Double]],
-      p: OpParams = Calibrated): IndexedSeq[OpValues] = {
+  def material(lat: Geometry.Lattice, frac: Array[Array[Double]]): IndexedSeq[OpValues] = {
     val n = frac.length
     var opCut = 7.0
     var opNl = Geometry.neighborVectors(lat, frac, opCut)
@@ -110,7 +86,7 @@ object OpFingerprint {
       var r = 7.0
       while (all.count(_.dist <= r) < 12) r += 1.0
       val sel = all.filter(_.dist <= r)
-      site(sel.map(_.dist).toArray, sel.map(_.vec).toArray, p)
+      site(sel.map(_.dist).toArray, sel.map(_.vec).toArray)
     }
   }
 
@@ -120,8 +96,7 @@ object OpFingerprint {
     *              ≥ 12 neighbors (the caller handles radius growth)
     * @param vecs  matching offset vectors
     */
-  def site(dists: Array[Double], vecs: Array[Array[Double]],
-      p: OpParams = Calibrated): OpValues = {
+  def site(dists: Array[Double], vecs: Array[Array[Double]]): OpValues = {
     val n = dists.length
     if (n == 0) return OpValues(0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
     var dmin = Double.MaxValue
@@ -161,17 +136,17 @@ object OpFingerprint {
           val vs = included.map(units(_)).toArray
           cn match {
             case 2 =>
-              opvals(w)(1) = dFac * geomOp(Bent150, vs, p)
-              opvals(w)(2) = dFac * geomOp(Lin, vs, p)
-            case 3 => opvals(w)(3) = dFac * geomOp(TriPlan, vs, p)
+              opvals(w)(1) = dFac * geomOp(Bent150, vs)
+              opvals(w)(2) = dFac * geomOp(Lin, vs)
+            case 3 => opvals(w)(3) = dFac * geomOp(TriPlan, vs)
             case 4 =>
-              opvals(w)(4) = dFac * geomOp(Tet, vs, p)
-              opvals(w)(5) = dFac * geomOp(SeeSaw, vs, p)
+              opvals(w)(4) = dFac * geomOp(Tet, vs)
+              opvals(w)(5) = dFac * geomOp(SeeSaw, vs)
               // "square co-planar" shares the octahedral branch family
               // (south-pole reward + 90°-spaced equatorial ring)
-              opvals(w)(6) = dFac * geomOp(Oct, vs, p)
-            case 5 => opvals(w)(7) = dFac * geomOp(PentPlan, vs, p)
-            case 6 => opvals(w)(8) = dFac * geomOp(Oct, vs, p)
+              opvals(w)(6) = dFac * geomOp(Oct, vs)
+            case 5 => opvals(w)(7) = dFac * geomOp(PentPlan, vs)
+            case 6 => opvals(w)(8) = dFac * geomOp(Oct, vs)
             case 12 => opvals(w)(9) = dFac * Geometry.q6Order(vs.toIndexedSeq, 12)
             case _ => ()
           }
@@ -247,9 +222,7 @@ object OpFingerprint {
   /** Best frame score for a motif over unit neighbor vectors. Each frame
     * (j pole, k x-axis) accumulates penalty-weighted angle terms; the
     * site takes the maximum frame. */
-  def geomOp(motif: Motif, units: Array[Array[Double]],
-      p: OpParams = Calibrated): Double = {
-    import p._
+  def geomOp(motif: Motif, units: Array[Array[Double]]): Double = {
     val n = units.length
     val ipi = 1.0 / math.Pi
     var best = 0.0
@@ -269,26 +242,21 @@ object OpFingerprint {
           if (!flagX) { xr(0) /= xn; xr(1) /= xn; xr(2) /= xn }
           var qsp = 0.0
           var nrm = 0.0
-          var gk = 0.0 // saved pole-angle Gaussian (tri/tet/pent families)
+          var gk = 0.0 // saved pole-angle Gaussian (tri/pent families)
           motif match {
             case Lin =>
               qsp += gauss(IgwLin, thetak * ipi - 1.0); nrm += 1
             case Bent150 =>
               qsp += gauss(IgwBent150, thetak * ipi - 5.0 / 6.0); nrm += 1
             case TriPlan => gk = gauss(IgwTriPlan, thetak * ipi - 2.0 / 3.0)
-            case Tet => gk = gauss(IgwTet, thetak * ipi - 0.6081734479693927)
             case PentPlan =>
               val ta = if (thetak <= 0.4 * math.Pi) 0.4 else 0.8
               gk = gauss(IgwPentPlan, thetak * ipi - ta)
-            case Oct => () // frames need an equatorial x-axis: the south
-              // pole is rewarded in the m-loop; a k at >= MinSpp leaves
-              // the frame empty (a bare antipodal pair must NOT score 1)
-            case SeeSaw =>
-              // mode 3: like oct, the x-axis neighbor's own angle is not
-              // scored — only m-loop terms count
-              if (SswMode != 3 && thetak < MinSpp) {
-                qsp += gauss(IgwSswEp, thetak * ipi - 0.5); nrm += 1
-              }
+            // only m-loop terms count. Oct and see-saw frames need an
+            // equatorial x-axis: the south pole is rewarded in the m-loop,
+            // and a k at >= MinSpp leaves the frame empty (a bare
+            // antipodal pair must NOT score 1)
+            case Tet | Oct | SeeSaw => ()
           }
 
           var m = 0
@@ -307,9 +275,8 @@ object OpFingerprint {
                     qsp += gk * gauss(IgwTriPlan, thetam * ipi - 2.0 / 3.0) * c * c
                     nrm += 1
                   case Tet =>
-                    val c = math.pow(math.abs(math.cos(1.5 * phi)), TetExpCos)
-                    val pole = if (TetMode == 1) 1.0 else gk
-                    qsp += pole * gauss(IgwTet, thetam * ipi - 0.6081734479693927) * c
+                    val c = math.pow(math.abs(math.cos(1.5 * phi)), 2)
+                    qsp += gauss(IgwTet, thetam * ipi - 0.6081734479693927) * c
                     nrm += 1
                   case PentPlan =>
                     val ta = if (thetam <= 0.4 * math.Pi) 0.4 else 0.8
@@ -331,14 +298,9 @@ object OpFingerprint {
                         qsp += WSpp * gauss(IgwSpp, thetam * ipi - 1.0)
                         nrm += WSpp
                       } else {
-                        // azimuthal term for the rectangular equatorial
-                        // pair at 90 degrees
-                        val az = SswMode match {
-                          case 0 => gauss(IgwAa, phi * ipi - 0.5)
-                          case 2 => val c = math.cos(2.0 * phi); c * c * c * c
-                          case _ => val c = math.cos(2.0 * phi); c * c
-                        }
-                        qsp += az * gauss(IgwSswEp, thetam * ipi - 0.5)
+                        // cos^2(2*phi) azimuth, like the octahedral ring
+                        val c = math.cos(2.0 * phi)
+                        qsp += c * c * gauss(IgwSswEp, thetam * ipi - 0.5)
                         nrm += 1
                       }
                     }

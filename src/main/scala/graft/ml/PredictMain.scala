@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** CLI entry point mirroring the reference's `main.py` (SURVEY.md §3.1):
   *
@@ -27,12 +27,7 @@ object PredictMain {
     require(!(mt == CompSt && formula.isDefined && structPath.isEmpty),
       "comp_st models need a structure input (-s), not a composition (-c)")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(8, sys.env.get("SPARK_MASTER"))
 
     val model = train(spark, diel, mt)
     val (label, row) = structPath match {

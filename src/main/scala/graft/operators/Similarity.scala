@@ -1270,7 +1270,7 @@ object Similarity {
     // plain IVF 0.917 at 20k vectors — ADC-noise impostors push true
     // neighbors down as N grows). The deep-probe ORACLE path instead
     // scales the window with the corpus: measured worst true-NN ADC rank
-    // 90/500 at sf0.001, 14/500 at sf0.01 (tools.PqProbe), so the
+    // 90/500 at sf0.001, 14/500 at sf0.01 (a one-off probe), so the
     // equality contract takes N/4 with ≥1.4× margin — still pruning 3/4
     // of the exact-scoring work.
     val rerankEff =

@@ -15,10 +15,6 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * hard-codes a layout assumption.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
@@ -76,8 +72,4 @@ object Tables {
   def spread(spark: SparkSession, df: DataFrame, key: String = "doc_id"): DataFrame =
     if (df.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism) df
     else df.repartition(spark.sparkContext.defaultParallelism, col(key))
-
-  /** Register all tables as temp views for the SQL surface. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => table(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -2,9 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-
-import graft.sources.Tables
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Structured Streaming over the events stream (SURVEY.md §2.G G19).
   *
@@ -30,14 +28,6 @@ object EventStreams {
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("c"), round(sum("value"), 2).as("s"))
       .select(col("w.start").as("ws"), col("event_type"), col("c"), col("s"))
-
-  /** Sliding 30-min windows every 10 min (overlapping assignment). */
-  def slidingAgg(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "30 minutes", "10 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("c"))
-      .select(col("w.start").as("ws"), col("event_type"), col("c"))
 
   /** Session windows per user with a 30-minute gap. */
   def sessionAgg(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
@@ -102,12 +92,5 @@ object EventStreams {
         col("c_ts") <= col("v_ts") + expr(s"INTERVAL $horizon"))
       .select(col("c_user").as("user_id"), col("click_id"), col("view_id"),
         col("c_ts"), col("v_ts"))
-  }
-
-  /** Run a streaming query over a memory-fed stream to completion
-    * (test/replay harness): returns the final result table. */
-  def runToCompletion(q: StreamingQuery): Unit = {
-    q.processAllAvailable()
-    q.stop()
   }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.Sessions
 import graft.sources.Tables
 
 /** Runnable streaming demo: replays the events table as a file-source
@@ -15,13 +15,7 @@ import graft.sources.Tables
 object StreamMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(8)
 
     // events.ts parquet vintage varies (NANOS-as-long vs naive µs); set the
     // legacy conf via the batch loader, then stream with the RAW file schema

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** ANN recall evaluation at a given scale factor:
   *   runMain graft.tools.AnnEval [sfDir]
@@ -9,12 +9,7 @@ import org.apache.spark.sql.SparkSession
 object AnnEval {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
     import graft.operators.Similarity
 
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
+import graft.Sessions
 import graft.streaming.ErStreams
 
 /** State-residency probe for the PRODUCTION ErStreams configuration
@@ -39,13 +39,7 @@ object ErStateProbe {
     val sleepMs = args.lift(3).map(_.toLong).getOrElse(400L)
     val hotPerBatch = args.lift(4).map(_.toInt).getOrElse(0)
     val maxBlockReg = args.lift(5).map(_.toInt).filter(_ > 0)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(8)
     import spark.implicits._
 
     def run(tag: String, horizon: Option[Long], cap: Option[Int] = None): Unit = {

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Sessions
 import graft.SparkEntry
 
 /** Dump `.explain("formatted")` of named queries to files — the
@@ -20,15 +19,8 @@ object ExplainDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = if (args.length > 3) args.drop(3).toSeq else SparkEntry.benchQueries
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
+    ProbeConfs(spark)
     new java.io.File(outDir).mkdirs()
     val all = SparkEntry.queries ++ ExtraQueries.extras ++ SparkEntry.benchOverrides
     names.foreach { n =>

@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.operators.Layout
 
 /** Scale evidence for the storage-layout family (the newest surface):
@@ -32,13 +33,7 @@ object LayoutTime {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val work = args.drop(1).headOption.getOrElse("/tmp/graft_layout_time")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
     val table = s"$work/events_part"
     val ix = s"$work/events_idx"
 

@@ -1,8 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
+import graft.Sessions
 import graft.SparkEntry
 
 /** Instrumentation probe (not a registered query): per-query breakdown of
@@ -25,15 +25,8 @@ object PhaseTime {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
+    ProbeConfs(spark)
 
     val jobs = scala.collection.mutable.ArrayBuffer.empty[JobRow]
     var record = false

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
+import graft.Sessions
 import graft.SparkEntry
 
 /** Execution-metrics audit: run named queries and report the SHUFFLE and
@@ -82,20 +82,8 @@ object PlanAudit {
     val dir = args.filterNot(_ == "-v").head
     val rest = args.filterNot(_ == "-v").drop(1).toSeq
     val names = if (rest.nonEmpty) rest else SparkEntry.benchQueries
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      // see QueryTime: shuffle-partition headroom for the scale probes
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 512)
-      // reclaim shuffle files of lineage-cut builds mid-probe (the
-      // PersistSlots.cachedCheckpoint contract; default 30min GC never
-      // fires inside a single probe run)
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    ProbeConfs(spark) // degrade-path knob, shared with QueryTime
+    val spark = Sessions.local(32)
+    ProbeConfs(spark)
     println(f"[audit] ${"query"}%-22s ${"scan_rows"}%12s ${"shuffle_rec"}%12s ${"shuffle_MB"}%10s ${"spill_MB"}%8s")
     names.foreach { n =>
       // benchOverrides LAST: a gate-form name probes its RAW operator,

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Sessions
 import graft.SparkEntry
 
 /** Non-contract query variants worth timing/auditing (not registered
@@ -43,19 +44,26 @@ object ExtraQueries {
     )
 }
 
-/** Shared probe-session knobs (QueryTime + PlanAudit — one definition so
-  * the two probes can never measure different planner regimes). */
+/** Shared probe-session knobs (QueryTime, PlanAudit, PhaseTime and
+  * ExplainDump — one definition so the probes can never measure different
+  * planner regimes). */
 object ProbeConfs {
-  /** Degrade-path probes (GRAFT_AUTOBCAST=-1, usually with
-    * GRAFT_BROADCAST_BUDGET=1): at probe SFs Catalyst re-broadcasts the
-    * small tables the JoinBacks fallback declines to hint, masking the
-    * fallback's physical shape — on the target cluster the same tables
-    * exceed the planner's threshold too, so -1 is the faithful stand-in. */
-  def apply(spark: SparkSession): Unit =
+  def apply(spark: SparkSession): Unit = {
+    // scale-probe headroom: big shuffles open at 512 partitions and AQE
+    // coalesces small ones back to ~32 — the local stand-in for sizing
+    // shuffle partitions to the data (the 100× probe's 336M-row pair
+    // dedup sort-spilled to disk exhaustion at a fixed 32)
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 512)
+    // degrade-path probes (GRAFT_AUTOBCAST=-1, usually with
+    // GRAFT_BROADCAST_BUDGET=1): at probe SFs Catalyst re-broadcasts the
+    // small tables the JoinBacks fallback declines to hint, masking the
+    // fallback's physical shape — on the target cluster the same tables
+    // exceed the planner's threshold too, so -1 is the faithful stand-in
     sys.env.get("GRAFT_AUTOBCAST").foreach { v =>
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
     }
+  }
 }
 
 /** Ad-hoc wall-clock timing for named SparkEntry queries against any data
@@ -71,22 +79,7 @@ object QueryTime {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      // scale-probe headroom: big shuffles open at 512 partitions and AQE
-      // coalesces small ones back to ~32 — the local stand-in for sizing
-      // shuffle partitions to the data (the 100× probe's 336M-row pair
-      // dedup sort-spilled to disk exhaustion at a fixed 32)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 512)
-      // reclaim shuffle files of lineage-cut builds mid-probe (the
-      // PersistSlots.cachedCheckpoint contract; default 30min GC never
-      // fires inside a single probe run)
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
     ProbeConfs(spark)
     names.foreach { n =>
       // benchOverrides LAST: a gate-form name probes its RAW operator,

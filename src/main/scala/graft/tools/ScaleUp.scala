@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
+
 /** Synthesize an sf1-equivalent corpus by replicating sf0.1 as FACTOR
   * independent shards — scale EVIDENCE, not an oracle input (the
   * read-only driver testdata stops at sf0.1):
@@ -160,12 +162,7 @@ object ScaleUp {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val outDir = args.drop(1).headOption.getOrElse("/tmp/graft_sf1")
     val inDir = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
 
     replicaTables(spark, inDir, factor).foreach { case (t, df) =>
       df.write.mode("overwrite").parquet(s"$outDir/$t.parquet")

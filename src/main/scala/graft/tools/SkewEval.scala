@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Sessions
 
 /** Skewed-join evidence at sf0.1 scale:
   *   runMain graft.tools.SkewEval [sfDir]
@@ -16,12 +18,7 @@ import org.apache.spark.sql.functions._
 object SkewEval {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
     import graft.operators.SkewJoin
     import graft.sources.Tables
 

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.operators.Snapshots
 import graft.sources.Tables
 
@@ -24,13 +24,7 @@ object SnapTime {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val work = args.drop(1).headOption.getOrElse("/tmp/graft_snap_time")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
     val fs = new org.apache.hadoop.fs.Path(work)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(work), true)

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Sessions
 import graft.operators.{CdcChunking, Chunking, NgramLm, Sharding, SubstringDedup}
 
 /** Plan-shape gates for the round-5 batch-2 operators: the chunkers and
@@ -13,12 +14,7 @@ class NewOpsPlanSpec extends AnyFunSuite {
 
   val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String = {
     df.collect() // finalize the adaptive plan

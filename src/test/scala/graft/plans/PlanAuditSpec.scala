@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Sessions
 import graft.SparkEntry
 
 /** Repo-wide physical-plan audit: EVERY registered driver query is
@@ -16,12 +17,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   /** Queries whose plan legitimately contains a BroadcastNestedLoopJoin:
     * either the exact quadratic ORACLE role (the scale path is a sibling

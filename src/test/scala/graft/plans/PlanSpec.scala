@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Sessions
 import graft.operators.{Relational, Similarity}
 import graft.sources.Tables
 
@@ -15,13 +16,7 @@ class PlanSpec extends AnyFunSuite {
 
   val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -176,9 +171,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("graft_dot is registered for SQL via SparkSessionExtensions") {
-    // suites share one JVM session; if another suite built it first the
-    // extensions config never ran — the on-session registrar covers that
-    GraftExtensions.register(spark)
+    // graft.Sessions installs the extensions on the JVM's one session,
+    // whichever suite builds it first
     Tables.embeddings(spark, sf).createOrReplaceTempView("emb_plan_test")
     val r = spark.sql(
       """SELECT graft_dot(CAST(embedding AS ARRAY<DOUBLE>), CAST(embedding AS ARRAY<DOUBLE>)) d
@@ -201,27 +195,6 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("PartitionFilters") &&
       plan.contains("crystal_system"), s"no partition pruning:\n${plan.take(800)}")
     assert(cubicOnly.count() == 87) // verified corpus count for cubic
-  }
-
-  test("optimizer rule fuses eig-mean to trace/3 and matches stored averages") {
-    import graft.materials.Materials
-    // suites share one JVM session (may lack the extensions config):
-    // extraOptimizations is the session-agnostic way to add the rule
-    if (!spark.experimental.extraOptimizations.contains(FuseEigMean))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ FuseEigMean
-    val mats = Materials.readJson(spark).limit(50)
-      .select(col("mp_id"),
-        MaterialOps.epsAvg(col("dielectric.epsilon_electronic")).as("calc"),
-        col("dielectric.epsilon_electronic_avg").as("stored"))
-    // the rule must have rewritten the expression away
-    val optimized = mats.queryExecution.optimizedPlan.toString
-    assert(!optimized.contains("graft_eig_mean"), s"fusion did not fire:\n$optimized")
-    // and trace/3 equals the stored mean-of-eigenvalues (exact identity)
-    mats.collect().foreach { r =>
-      assert(math.abs(r.getDouble(1) - r.getDouble(2)) < 1e-6,
-        s"${r.getString(0)}: ${r.getDouble(1)} vs ${r.getDouble(2)}")
-    }
   }
 
   test("bucketed tables join without a shuffle (co-located join story)") {
