@@ -11,7 +11,8 @@ import org.apache.spark.sql.types._
 
 /** Bounded top-K neighbor aggregate for the margin-mining tail
   * (r10 optimization): per group, keep the K best (score, id) entries
-  * under the total order (score DESC, id ASC), dedup'd by id, and emit
+  * under the total order (score DESC, id ASC), one per id at its highest
+  * score, and emit
   *
   *   struct(top_id, top_score, avg_score over the kept entries)
   *
@@ -51,12 +52,15 @@ import org.apache.spark.sql.types._
   *   - (score desc, id asc) is a TOTAL order over distinct-id entries,
   *     so the kept set equals the row_number ≤ K set, independent of
   *     encounter/merge order;
-  *   - duplicate (id, score) rows — the multi-table LSH candidate stream
-  *     pre-distinct — collapse to one entry: the same id only re-arrives
-  *     with the SAME score (the same pair scores identically), insert
-  *     dedups against kept ids, and a duplicate of an EVICTED entry
-  *     loses to every survivor under the same total order, so it is
-  *     rejected exactly like its twin;
+  *   - each id counts once, at the highest score it arrives with (the
+  *     top-K of the per-id maximum): insert drops a kept id's worse
+  *     twin and replaces a kept id's lower score; merge inserts the
+  *     other buffer's entries, and an id whose maximum ranks outside its
+  *     own side's top-K cannot rank in the union's. Duplicate (id, score) rows — the multi-table
+  *     LSH candidate stream pre-distinct, where the same pair always
+  *     scores the same — collapse to one entry, and a duplicate of an
+  *     EVICTED entry loses to every survivor, so it is rejected exactly
+  *     like its twin;
   *   - avg sums the kept scores in buffer (descending) order — fixed,
   *     deterministic; vs the window aggregate's summation order the
   *     drift is ulp-level on ≤ K doubles, far below the 4-decimal margin
@@ -119,16 +123,28 @@ case class TopKMarginAgg(
   @inline private def better(c1: Double, id1: Long, c2: Double, id2: Long): Boolean =
     c1 > c2 || (c1 == c2 && id1 < id2)
 
-  /** Sorted insert with id-dedup; sentinels (always worst) shift out. */
+  /** Sorted insert keeping each id once, at the highest score it arrived
+    * with; sentinels (always worst) shift out. */
   private def insert(buf: InternalRow, off: Int, id: Long, c: Double): Unit = {
-    // find the insertion point; reject kept duplicates on the way
-    var p = 0
-    while (p < k && better(buf.getDouble(off + p), buf.getLong(off + k + p), c, id)) {
-      if (buf.getLong(off + k + p) == id) return // kept, better-or-equal twin
-      p += 1
+    // an id already kept: stop if it ranks as well, else drop it (closing
+    // the gap with a sentinel at the tail) and place the better entry
+    var j = 0
+    while (j < k && buf.getLong(off + k + j) != id) j += 1
+    if (j < k) {
+      if (!better(c, id, buf.getDouble(off + j), id)) return
+      while (j < k - 1) {
+        buf.setDouble(off + j, buf.getDouble(off + j + 1))
+        buf.setLong(off + k + j, buf.getLong(off + k + j + 1))
+        j += 1
+      }
+      buf.setDouble(off + k - 1, NoCs)
+      buf.setLong(off + k + k - 1, NoId)
     }
-    if (p == k) return // below the kept range (also rejects evicted twins)
-    if (buf.getLong(off + k + p) == id) return // identical entry already kept
+    // find the insertion point; below the kept range the entry is dropped
+    // (an evicted id's higher score is placed like any new entry)
+    var p = 0
+    while (p < k && better(buf.getDouble(off + p), buf.getLong(off + k + p), c, id)) p += 1
+    if (p == k) return
     // shift the tail down one slot and place the new entry
     var q = k - 1
     while (q > p) {

@@ -101,7 +101,7 @@ object Graphs {
     // decades inside the 1e-9 export gate, and the fallback-parity spec
     // pins both branches to 1e-12. Past the budget (the 100 TB graph)
     // the distributed edge-join recurrence below runs unchanged.
-    if (JoinBacks.fits(spark, n * 24L + m * 16L, sides = 1)) {
+    if (pagerankInCore(spark, n, m)) {
       val g = PersistSlots.cached(spark, s"pr-adj:$dir") {
         val w = org.apache.spark.sql.expressions.Window.orderBy("v")
         val idx = nodes.select(col("v"), (row_number().over(w) - 1).as("i"))
@@ -296,10 +296,10 @@ object Graphs {
     // FallbackParitySpec pins branch-flip parity. Past either bound the
     // distributed wedge/bloom/shuffle-hash pipeline below runs
     // unchanged — the 100 TB path.
-    val localOk = JoinBacks.fits(spark, 64L * m0, sides = 1) &&
+    val localOk = trianglesInCore(spark, m0,
       triStats.getOrElseUpdate((spark.sparkContext.applicationId, dir),
         oriented.groupBy("src").agg(count(lit(1)).as("d"))
-          .agg(sum(col("d") * col("d"))).collect()(0).getLong(0)) <= LocalWedgeCap
+          .agg(sum(col("d") * col("d"))).collect()(0).getLong(0)))
     if (localOk) return trianglesLocal(spark, dir, oriented)
     // wedges at apex u: out-neighbor pairs with v ≺ w in (degree, id)
     // order — dedups each wedge AND matches the closing edge's direction
@@ -363,6 +363,27 @@ object Graphs {
     * second on one core — past it the distributed pipeline wins even
     * when the adjacency fits memory. */
   val LocalWedgeCap: Long = 1L << 28
+
+  /** Edge cap for both in-core branches: each builds its whole adjacency
+    * as ONE aggregated row (pagerank's per-dst int lists, triangles'
+    * packed-long edge list — 8 B an edge, 240 MB at the cap), and Spark
+    * fails any single row or array past 2 GB. 3·10⁷ edges keeps that row
+    * far below the limit even when a large heap passes the budget. */
+  val LocalEdgeCap: Long = 30000000L
+
+  /** Pagerank's branch: in-core when `m` edges are under
+    * [[LocalEdgeCap]] and n·24 B of node arrays plus m·16 B of
+    * adjacency fit one task's share of the broadcast budget. */
+  private[operators] def pagerankInCore(spark: SparkSession, n: Long, m: Long): Boolean =
+    m <= LocalEdgeCap && JoinBacks.fits(spark, n * 24L + m * 16L, sides = 1)
+
+  /** The triangle branch: in-core when `m` oriented edges are under
+    * [[LocalEdgeCap]], their 64 B each fit the budget, and the wedge
+    * work Σ d⁺² (a job, so evaluated only when the first two hold) is
+    * under [[LocalWedgeCap]]. */
+  private[operators] def trianglesInCore(spark: SparkSession, m: Long,
+      wedgeWork: => Long): Boolean =
+    m <= LocalEdgeCap && JoinBacks.fits(spark, 64L * m, sides = 1) && wedgeWork <= LocalWedgeCap
 
   /** The in-memory branch: dense node index + per-node sorted oriented
     * out-lists, built once per corpus into the `tri-adj` slot (the q32

@@ -72,4 +72,25 @@ class TopKMarginAggSpec extends SparkSpec {
       assert(got(1L) == ref(1L), s"parts=$parts: got ${got(1L)}, want ${ref(1L)}")
     }
   }
+
+  test("property: top-K of each id's highest score, vs brute force, any partitioning") {
+    val rnd = new scala.util.Random(17)
+    for (trial <- 0 until 8) {
+      // few ids and a coarse score grid: ids re-arrive with higher, lower
+      // and equal scores, and scores tie across ids
+      val rows = Seq.fill(40 + rnd.nextInt(120))(
+        (rnd.nextInt(4).toLong, rnd.nextInt(12).toLong, rnd.nextInt(10) / 10.0))
+      val want = rows.groupBy(_._1).map { case (g, rs) =>
+        val top = rs.groupBy(_._2).map { case (id, xs) => (id, xs.map(_._3).max) }.toSeq
+          .sortBy { case (id, cs) => (-cs, id) }.take(K)
+        var sum = 0.0
+        top.foreach(sum += _._2)
+        g -> (top.head._1, top.head._2, sum / top.size)
+      }
+      for (parts <- Seq(1, 3, 7)) {
+        val got = agged(rnd.shuffle(rows), parts)
+        assert(got == want, s"trial $trial, parts=$parts: got $got, want $want")
+      }
+    }
+  }
 }

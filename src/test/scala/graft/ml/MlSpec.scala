@@ -156,6 +156,31 @@ class MlSpec extends SparkSpec {
     assert(a == b, s"$a vs $b")
   }
 
+  test("comp_st save/load round trip on synthetic structures (no reference data)") {
+    import DielectricModel._
+    val feats = ForestRegressorSpec.featurized(spark, 60, seed = 11L)
+    val model = pipeline(CompSt, 10, 5).fit(feats)
+    val dir = java.nio.file.Files.createTempDirectory("graft_model").toString + "/el_comp_st"
+    save(model, dir)
+    val loaded = load(dir)
+    def preds(m: org.apache.spark.ml.PipelineModel) = m.transform(feats)
+      .select("mp_id", "prediction").collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val (a, b) = (preds(model), preds(loaded))
+    assert(a.size == 60 && a.keySet == b.keySet)
+    a.foreach { case (id, p) =>
+      assert(java.lang.Double.doubleToRawLongBits(p) == java.lang.Double.doubleToRawLongBits(b(id)),
+        s"$id: $p vs ${b(id)}")
+    }
+    def forest(m: org.apache.spark.ml.PipelineModel) =
+      m.stages.last.asInstanceOf[org.apache.spark.ml.regression.RandomForestRegressionModel]
+    val (fa, fb) = (forest(model), forest(loaded))
+    assert(fb.getNumTrees == 10 && fb.trees.length == 10 && fb.getMaxDepth == 5)
+    assert(fb.featureImportances.size == featureCols(CompSt).size)
+    assert(fb.featureImportances == fa.featureImportances)
+    assert(math.abs(fb.featureImportances.toArray.sum - 1.0) < 1e-9)
+    feats.unpersist()
+  }
+
   test("bare pymatgen Structure JSON predicts (composition derived from sites)") {
     import DielectricModel._
     import org.apache.spark.sql.functions._

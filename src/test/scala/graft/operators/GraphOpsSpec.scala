@@ -39,6 +39,23 @@ class GraphOpsSpec extends SparkSpec {
     assert(pr.length == nodes)
   }
 
+  test("in-core graph branches refuse an edge count past LocalEdgeCap, even with budget to spare") {
+    val over = Graphs.LocalEdgeCap + 1
+    val prev = spark.conf.getOption("graft.broadcast.budget")
+    spark.conf.set("graft.broadcast.budget", Long.MaxValue / 4)
+    try {
+      assert(JoinBacks.fits(spark, 64L * over, sides = 1), "the budget, not the cap, refused")
+      assert(!Graphs.pagerankInCore(spark, 1000L, over))
+      // the wedge work is a job over the edges: past the cap it must not run
+      assert(!Graphs.trianglesInCore(spark, over, fail("wedge work evaluated past the edge cap")))
+      assert(Graphs.pagerankInCore(spark, 1000L, Graphs.LocalEdgeCap))
+      assert(Graphs.trianglesInCore(spark, Graphs.LocalEdgeCap, 0L))
+    } finally prev match {
+      case Some(v) => spark.conf.set("graft.broadcast.budget", v)
+      case None => spark.conf.unset("graft.broadcast.budget")
+    }
+  }
+
   test("pagerank gate margin: an independent sequential replay lands ≥3 decades inside GateTol") {
     // the cross-engine situation the export-gate defends: a DIFFERENT
     // summation order replaying the same recurrence. A driver-side
