@@ -115,10 +115,10 @@ object ForestRegressor {
   val MaxTrainingBytes: Long = 512L << 20
 
   /** MLlib's default bin count: at most 31 thresholds per feature. */
-  val MaxBins = 32
+  private val MaxBins = 32
 
   /** Poisson bagging rate (MLlib's subsamplingRate with replacement). */
-  val SubsamplingRate = 0.9
+  private val SubsamplingRate = 0.9
 
   /** MLlib's Utils.EPSILON: a node with smaller impurity is a leaf. */
   private val Eps = math.ulp(1.0)
