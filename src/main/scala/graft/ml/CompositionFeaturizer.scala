@@ -1,5 +1,7 @@
 package graft.ml
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
@@ -8,11 +10,12 @@ import graft.ml.RowStats.{minMax, sum}
 
 /** Compositional featurizers (SURVEY.md §2.C C1–C10; §2.D calculus 1).
   *
-  * Dataflow: one narrow flatMap computes each record's whole feature row
-  * in Scala — matminer's per-record loop (reference ml_prediction.py:26-37)
-  * without explode, window, join, groupBy or shuffle. A composition has ≤6
-  * species, so its row is task-local work and the plan is one stage at any
-  * input size.
+  * Dataflow: one Scala function computes each record's whole feature row
+  * — matminer's per-record loop (reference ml_prediction.py:26-37) without
+  * explode, window, join, groupBy or shuffle. A composition has ≤6
+  * species, so its row is task-local work: a distributed input is one
+  * narrow flatMap stage at any size, and an input already on the driver
+  * (a scored formula list) is featurized there with no job at all.
   *
   * Weighted std is the unbiased reliability-weight form
   * √((Σf·x² − μ²)/(1 − Σf²)) of matminer's PropertyStats std_dev (0 for a
@@ -322,16 +325,23 @@ object CompositionFeaturizer {
 
   /** Featurize a frame of (idCol, composition Map[String,Double] counts):
     * one row per id with a non-empty composition — the id, then every
-    * feature column. */
+    * feature column. An input already on the driver ([[DriverRows]]) is
+    * featurized there, in one thread (a row costs microseconds), and comes
+    * back as a local relation; any other input runs the same rows in a
+    * narrow map. */
   def featurize(spark: SparkSession, df: DataFrame, idCol: String, compCol: String): DataFrame = {
     // nullability as the aggregate plans declared it: only the count is non-null
     val schema = StructType(df.schema(idCol) +: outputColumns.map(c =>
       StructField(c, DoubleType, nullable = c != "f_nelements")))
-    df.select(col(idCol), map_keys(col(compCol)), map_values(col(compCol)))
-      .flatMap { r =>
-        val els = if (r.isNullAt(1)) Nil else r.getSeq[String](1)
-        if (els.isEmpty) None
-        else Some(Row.fromSeq(r.get(0) +: featureRow(els, r.getSeq[Double](2)).toSeq))
-      }(Encoders.row(schema))
+    val entries = df.select(col(idCol), map_keys(col(compCol)), map_values(col(compCol)))
+    val toRow = (r: Row) => {
+      val els = if (r.isNullAt(1)) Nil else r.getSeq[String](1)
+      if (els.isEmpty) None
+      else Some(Row.fromSeq(r.get(0) +: featureRow(els, r.getSeq[Double](2)).toSeq))
+    }
+    DriverRows.of(entries) match {
+      case Some(rows) => spark.createDataFrame(rows.toSeq.flatMap(toRow).asJava, schema)
+      case None => entries.flatMap(toRow)(Encoders.row(schema))
+    }
   }
 }

@@ -157,10 +157,15 @@ object DielectricModel {
       path: String): DataFrame = {
     val mat0 = spark.read.schema(graft.materials.MaterialSchema.schema)
       .option("multiLine", true).json(path)
-    val head0 = mat0.select(col("mp_id"), col("formula"), col("structure.sites")).head()
+    val ids = mat0.select(col("mp_id"), col("formula")).collect()
     val mat =
-      if (!head0.isNullAt(0) || !head0.isNullAt(1)) mat0
-      else {
+      if (!ids.head.isNullAt(0) || !ids.head.isNullAt(1)) {
+        // a record's formula reaches the featurizers as is: refuse its
+        // unknown elements as the bare-structure branch does
+        ids.filterNot(_.isNullAt(1)).map(_.getString(1)).foreach(f =>
+          requireKnownElements(FormulaParser.parse(f).keys, s"$path ($f)"))
+        mat0
+      } else {
         // bare Structure JSON: re-read with the structure sub-schema and
         // wrap it in the canonical record shape
         val st = spark.read.schema(graft.materials.MaterialSchema.structure)
@@ -223,9 +228,9 @@ object DielectricModel {
     requireKnownElements(counts.keys, path)
     val formula = counts.toSeq.sortBy(_._1).map { case (e, n) =>
       if (n == 1.0) e else s"$e${n.toInt}" }.mkString
-    val base = Seq((path, formula, counts)).toDF("mp_id", "formula", "comp")
+    val base = Seq((path, counts)).toDF("mp_id", "comp")
     val comp = CompositionFeaturizer.featurize(spark, base, "mp_id", "comp")
-      .join(base.select("mp_id", "formula"), Seq("mp_id"))
+      .withColumn("formula", lit(formula))
     val feats = mt match {
       case Comp => comp
       case CompSt =>

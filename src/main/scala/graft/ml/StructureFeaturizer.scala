@@ -1,5 +1,9 @@
 package graft.ml
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
@@ -16,8 +20,10 @@ import graft.ml.RowStats.{minMax, stddevPop, sum}
   * reduces the sites to the material's feature row with the SiteFeaturizer
   * calculus (§2.D: mean, population std as np.std, min, max) in the same
   * task — embarrassingly parallel across materials, no explode, groupBy or
-  * join. The only shuffle is the repartition that spreads the CPU-heavy
-  * kernels over the cluster.
+  * join. A distributed input's only shuffle is the repartition that
+  * spreads the CPU-heavy kernels over the cluster; an input already on the
+  * driver (a scored POSCAR, a generated window) runs the same two
+  * functions on the driver's cores with no job and no shuffle.
   *
   * The reductions reproduce Spark's avg/stddev_pop/min/max bit for bit
   * (FeaturizerParitySpec): sums start at 0.0 in site order, the std runs
@@ -308,17 +314,29 @@ object StructureFeaturizer {
 
   /** Featurize raw StructIn rows (e.g. POSCAR-derived structures): one row
     * per material with at least one site — mp_id, the four reductions of
-    * every site field, then the per-material columns. */
+    * every site field, then the per-material columns. An input already on
+    * the driver ([[DriverRows]]) is featurized there, one future per
+    * material over the driver's cores, and comes back in input order as a
+    * local relation; any other input is spread over the cluster first. */
   def featurizeStructs(spark: SparkSession,
       in: org.apache.spark.sql.Dataset[StructIn]): DataFrame = {
-    // size the CPU-heavy kernel stage to the cluster, NOT to however the
-    // input landed (the JSON ingest coalesces to 4 partitions; a
-    // single-file parquet read is 1): the shuffle of this tiny frame is
-    // noise next to the Voronoi/Ewald cost it parallelizes
-    val par = spark.sparkContext.defaultParallelism
     val schema = StructType(StructField("mp_id", StringType) +:
       (siteAggColumns ++ materialColumns).map(StructField(_, DoubleType)))
-    in.repartition(par).flatMap(s => featureRow(featurizeOne(s)))(Encoders.row(schema))
+    DriverRows.of(in) match {
+      case Some(structs) =>
+        // the kernels cost milliseconds per material: a sequential loop
+        // lost to the distributed map on an 84-row window, so use every core
+        import scala.concurrent.ExecutionContext.Implicits.global
+        val rows = Future.traverse(structs.toSeq)(s => Future(featureRow(featurizeOne(s))))
+        spark.createDataFrame(Await.result(rows, Duration.Inf).flatten.asJava, schema)
+      case None =>
+        // size the CPU-heavy kernel stage to the cluster, NOT to however the
+        // input landed (the JSON ingest coalesces to 4 partitions; a
+        // single-file parquet read is 1): the shuffle of this tiny frame is
+        // noise next to the Voronoi/Ewald cost it parallelizes
+        in.repartition(spark.sparkContext.defaultParallelism)
+          .flatMap(s => featureRow(featurizeOne(s)))(Encoders.row(schema))
+    }
   }
 
   /** Reduce one material's sites to its feature row; None without sites. */

@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -9,7 +10,9 @@ import graft.ml.StructureFeaturizer.StructIn
 /** Pins both featurizers bit for bit against `featurizer_parity.tsv`, the
   * output of the explode/window/groupBy featurizers they replaced on the
   * same inputs (see FIXTURES.md). Every double is compared as its raw long
-  * bits, and the schema (column order, type, nullability) line by line. */
+  * bits, and the schema (column order, type, nullability) line by line.
+  * Each fixture runs through both branches of each featurizer: on the
+  * driver (a local relation in) and distributed (the same rows off it). */
 class FeaturizerParitySpec extends SparkSpec {
   import FeaturizerParitySpec._
 
@@ -47,6 +50,28 @@ class FeaturizerParitySpec extends SparkSpec {
     check("struct", render("struct",
       StructureFeaturizer.featurizeStructs(spark, structureSet(spark))))
   }
+
+  // the frames above are local relations, so they take the driver branch;
+  // the same rows behind an RDD scan take the distributed one
+
+  test("a local input takes the driver branch, an RDD scan the distributed one") {
+    def comp(onDriver: Boolean) =
+      CompositionFeaturizer.featurize(spark, compositionFrame(spark, onDriver), "id", "comp")
+    def struct(onDriver: Boolean) =
+      StructureFeaturizer.featurizeStructs(spark, structureSet(spark, onDriver))
+    assert(isLocal(comp(onDriver = true)) && !isLocal(comp(onDriver = false)))
+    assert(isLocal(struct(onDriver = true)) && !isLocal(struct(onDriver = false)))
+  }
+
+  test("composition features match the fixture bit for bit off the driver") {
+    check("comp", render("comp", CompositionFeaturizer.featurize(spark,
+      compositionFrame(spark, onDriver = false), "id", "comp")))
+  }
+
+  test("structure features match the fixture bit for bit off the driver") {
+    check("struct", render("struct",
+      StructureFeaturizer.featurizeStructs(spark, structureSet(spark, onDriver = false))))
+  }
 }
 
 object FeaturizerParitySpec {
@@ -64,9 +89,13 @@ object FeaturizerParitySpec {
     Seq("SiO2", "Ca2SnO4", "Mn3O4", "K0.5Na0.5NbO3", "Ba2SrCaNb2TiO11", "LaZnAsO")
       .map(f => f -> Some(graft.functions.FormulaParser.parse(f).toSeq))
 
-  def compositionFrame(spark: SparkSession): DataFrame = {
+  /** The compositions as a local relation, or (`onDriver = false`) behind
+    * an RDD scan, so the featurizer takes its distributed branch. The map
+    * is built after the scan: a Scala Map in between would reorder it. */
+  def compositionFrame(spark: SparkSession, onDriver: Boolean = true): DataFrame = {
     import spark.implicits._
-    compositions.map { case (id, kv) => (id, kv.map(_.map(_._1)), kv.map(_.map(_._2))) }
+    val rows = compositions.map { case (id, kv) => (id, kv.map(_.map(_._1)), kv.map(_.map(_._2))) }
+    (if (onDriver) rows.toDS() else spark.createDataset(spark.sparkContext.parallelize(rows, 2)))
       .toDF("id", "els", "cnts")
       .select(col("id"), map_from_arrays(col("els"), col("cnts")).as("comp"))
   }
@@ -117,10 +146,16 @@ object FeaturizerParitySpec {
     Seq(rutile, perovskite, rocksalt, wurtzite, triclinic)
   }
 
-  def structureSet(spark: SparkSession): Dataset[StructIn] = {
+  /** The structures as a local relation, or behind an RDD scan. */
+  def structureSet(spark: SparkSession, onDriver: Boolean = true): Dataset[StructIn] = {
     import spark.implicits._
-    structures.toDS()
+    if (onDriver) structures.toDS()
+    else spark.createDataset(spark.sparkContext.parallelize(structures, 2))
   }
+
+  /** Whether a frame's optimized plan is a driver-side local relation. */
+  def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
   /** Fixture lines: the schema, then every double of every row as its raw
     * long bits (the decimal value after it is only for reading). */

@@ -8,11 +8,13 @@ import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 
 import graft.SparkSpec
+import graft.ml.FeaturizerParitySpec.{compositionFrame, isLocal, structureSet}
 import graft.tools.PlanAudit
 
-/** Keeps both featurizers row-local: their executed plans hold no Window,
-  * Aggregate, Generate or Join node, and the only Exchange is the
-  * structure side's repartition. */
+/** Keeps both featurizers row-local. On a distributed input their executed
+  * plans hold no Window, Aggregate, Generate or Join node, and the only
+  * Exchange is the structure side's repartition. On an input already on
+  * the driver they launch no job at all and return a local relation. */
 class FeaturizerPlanSpec extends SparkSpec {
 
   private def executedNodes(df: DataFrame): Seq[SparkPlan] = {
@@ -34,11 +36,22 @@ class FeaturizerPlanSpec extends SparkSpec {
 
   test("composition featurizer: one narrow map, no exchange") {
     assertRowLocal(CompositionFeaturizer.featurize(spark,
-      FeaturizerParitySpec.compositionFrame(spark), "id", "comp"), maxExchanges = 0)
+      compositionFrame(spark, onDriver = false), "id", "comp"), maxExchanges = 0)
   }
 
   test("structure featurizer: one narrow map after the repartition") {
     assertRowLocal(StructureFeaturizer.featurizeStructs(spark,
-      FeaturizerParitySpec.structureSet(spark)), maxExchanges = 1)
+      structureSet(spark, onDriver = false)), maxExchanges = 1)
+  }
+
+  test("driver-resident inputs: a local relation out and no job") {
+    def assertDriverOnly(featurize: => DataFrame): Unit = {
+      var out: DataFrame = null
+      val activity = SparkActivity.of(spark) { out = featurize; out.collect() }
+      assert(isLocal(out), out.queryExecution.optimizedPlan.treeString)
+      assert(activity == SparkActivity(0, 0L), s"featurize + collect launched $activity")
+    }
+    assertDriverOnly(CompositionFeaturizer.featurize(spark, compositionFrame(spark), "id", "comp"))
+    assertDriverOnly(StructureFeaturizer.featurizeStructs(spark, structureSet(spark)))
   }
 }

@@ -1,12 +1,7 @@
 package graft.ml
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.regression.RandomForestRegressor
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,32 +14,10 @@ import graft.ml.StructureFeaturizer.StructIn
 class ForestRegressorSpec extends SparkSpec {
   import ForestRegressorSpec._
 
-  /** Jobs started while `body` runs: a marker job submitted afterwards
-    * flushes the listener bus, which delivers job starts in order. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val started = new ConcurrentLinkedQueue[String]()
-    val marker = s"forest-spec-marker-${System.nanoTime()}"
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.add(Option(e.properties).map(_.getProperty("spark.job.description", "")).orNull)
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!started.asScala.exists(_ == marker) && System.nanoTime() < deadline) Thread.sleep(20)
-      val seen = started.asScala.toSeq
-      assert(seen.contains(marker), "listener never saw the marker job")
-      seen.takeWhile(_ != marker).size
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("one comp_st pipeline fit on 60 rows runs at most 4 jobs") {
     val feats = featurized(spark, 60, seed = 5L)
-    val jobs = jobsOf(DielectricModel.pipeline(DielectricModel.CompSt, 10, 5, 5L).fit(feats))
+    val jobs = SparkActivity.of(spark)(
+      DielectricModel.pipeline(DielectricModel.CompSt, 10, 5, 5L).fit(feats)).jobs
     info(s"jobs per fit: $jobs")
     // scaler (2) + collect (1) + the tree-parallel training job (1)
     assert(jobs <= 4, s"$jobs jobs for one fit")

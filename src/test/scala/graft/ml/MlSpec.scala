@@ -259,6 +259,24 @@ class MlSpec extends SparkSpec {
     assert(ex.getMessage.contains("Fe"))
   }
 
+  test("predictStructureJson refuses a material record with an element outside the table") {
+    import spark.implicits._
+    import DielectricModel._
+    val base = Seq("SiO2", "TiO2", "MgO").zipWithIndex
+      .map { case (f, i) => (f, FormulaParser.parse(f), 0.1 * i) }
+      .toDF("formula", "comp", "label")
+    val model = pipeline(Comp, numTrees = 2, maxDepth = 2)
+      .fit(CompositionFeaturizer.featurize(spark, base, "formula", "comp")
+        .join(base.select("formula", "label"), Seq("formula")))
+    val dir = java.nio.file.Files.createTempDirectory("record_fe").toString
+    val path = s"$dir/record.json"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      """{"mp_id": "mp-fe", "formula": "Fe2O3"}""")
+    // Fe would drop out of every stat and leave a prediction for plain O
+    val ex = intercept[IllegalArgumentException](predictStructureJson(spark, model, Comp, path))
+    assert(ex.getMessage.contains("Fe"), ex.getMessage)
+  }
+
   test("CLI semantics: accepts both spellings, rejects junk") {
     import DielectricModel._
     assert(DielectricType.parse("el") == Electronic)
