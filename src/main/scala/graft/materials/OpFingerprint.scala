@@ -26,7 +26,7 @@ package graft.materials
   * polar angles of the others against the motif's ideal angles and their
   * azimuths against the motif's rotational symmetry, and the site takes
   * the best frame. The inverse Gaussian widths (`Igw*`) are calibrated
-  * against the reference's shipped StandardScaler statistics — the same
+  * against the reference's shipped scaler statistics — the same
   * numeric-parity oracle the other discovered conventions use.
   */
 object OpFingerprint {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import graft.materials.Materials
 
 /** Scaler-parity drift report (SURVEY §5.2.2): the reference ships the
-  * fitted StandardScaler `mean_`/`scale_` vectors for all four models
+  * fitted sklearn scaler `mean_`/`scale_` vectors for all four models
   * (the prediction_model scaler joblibs, extracted by tools/extract_scaler.py
   * into tools/scaler_vectors.json) — the only per-FEATURE fidelity oracle
   * available, since the matminer tables themselves are not in the

@@ -1,7 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.ml.regression.RandomForestRegressor
+import org.apache.spark.ml.regression.{RandomForestRegressionModel, RandomForestRegressor}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,31 +14,27 @@ import graft.ml.StructureFeaturizer.StructIn
 class ForestRegressorSpec extends SparkSpec {
   import ForestRegressorSpec._
 
-  test("one comp_st pipeline fit on 60 rows runs at most 4 jobs") {
+  test("one comp_st pipeline fit on 60 rows runs at most 2 jobs and no shuffle") {
     val feats = featurized(spark, 60, seed = 5L)
-    val jobs = SparkActivity.of(spark)(
-      DielectricModel.pipeline(DielectricModel.CompSt, 10, 5, 5L).fit(feats)).jobs
-    info(s"jobs per fit: $jobs")
-    // scaler (2) + collect (1) + the tree-parallel training job (1)
-    assert(jobs <= 4, s"$jobs jobs for one fit")
+    val fit = SparkActivity.of(spark)(
+      DielectricModel.pipeline(DielectricModel.CompSt, 10, 5, 5L).fit(feats))
+    info(s"per fit: ${fit.jobs} jobs, ${fit.shuffleBytes} shuffle bytes")
+    // collect (1) + the tree-parallel training job (1)
+    assert(fit.jobs <= 2, s"${fit.jobs} jobs for one fit")
+    assert(fit.shuffleBytes == 0L, s"${fit.shuffleBytes} shuffle bytes for one fit")
     feats.unpersist()
   }
 
   test("the forest depends on the rows, not on their partitioning or order") {
-    // scaled features fixed up front: a scaler refit over another
-    // partitioning moves its mean in the last bits, and with it every
-    // printed threshold
-    val raw = featurized(spark, 60, seed = 9L)
-    val prep = new org.apache.spark.ml.Pipeline().setStages(
-      DielectricModel.pipeline(DielectricModel.CompSt, 10, 5, 9L).getStages.take(2)).fit(raw)
-    val feats = prep.transform(raw).select("features", "label").persist()
-    val rf = new ForestRegressor().setNumTrees(10).setMaxDepth(5).setSeed(9L)
-    val a = rf.fit(feats.coalesce(1))
-    val b = rf.fit(feats.repartition(7).orderBy(rand(3L)))
+    val feats = featurized(spark, 60, seed = 9L)
+    val pipe = DielectricModel.pipeline(DielectricModel.CompSt, 10, 5, 9L)
+    def forest(df: DataFrame) =
+      pipe.fit(df).stages.last.asInstanceOf[RandomForestRegressionModel]
+    val a = forest(feats.coalesce(1))
+    val b = forest(feats.repartition(7).orderBy(rand(3L)))
     assert(a.toDebugString == b.toDebugString)
     assert(a.totalNumNodes > 2 * a.getNumTrees, "trees did not grow")
     feats.unpersist()
-    raw.unpersist()
   }
 
   test("holdout RMSE within 1.1x of MLlib's RandomForestRegressor on 8 synthetic sets") {

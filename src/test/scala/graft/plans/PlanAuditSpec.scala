@@ -48,6 +48,11 @@ class PlanAuditSpec extends AnyFunSuite {
   )
 
   test("every registered query plans without a CartesianProduct; nested loops only where designed") {
+    // the sketch and BPE gate queries read exports that Verify writes
+    // ahead of its dump; write them here so the sweep plans those queries
+    // whatever ran before it
+    graft.operators.Sketches.exportEstimates(spark, sf)
+    graft.operators.Bpe.exportStates(spark, sf)
     var audited = 0
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
@@ -69,8 +74,9 @@ class PlanAuditSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     assert(offenders.isEmpty, s"plan audit failures:\n${offenders.mkString("\n")}")
     // the sweep must actually cover the surface — a broken fixture path
-    // would otherwise pass vacuously (a few queries read Verify-written
-    // exports and may be absent in a bare test environment)
+    // would otherwise pass vacuously (a few queries read the reference
+    // checkout or other Verify-only exports, which a bare test
+    // environment may lack)
     assert(audited >= SparkEntry.queries.size - 8,
       s"only $audited of ${SparkEntry.queries.size} queries auditable")
     // and the allow-list must not rot: every entry still names a query
