@@ -277,21 +277,15 @@ object DielectricModel {
   val PredExportPath = "/tmp/graft_ml_pred.parquet"
   val GoldenExportPath = "/tmp/graft_ml_golden.parquet"
 
-  private val parityCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   /** (mp_id, pred_log10, label) for the el_comp model — trained ONCE per
-    * session (memoized): the prediction query, the golden-parity export,
-    * and the gate query all share the fit. */
+    * session (a PersistSlots slot): the prediction query, the
+    * golden-parity export, and the gate query all share the fit. */
   def elCompPredFrame(spark: SparkSession): DataFrame =
-    parityCache.getOrElseUpdate(spark.sparkContext.applicationId, {
+    graft.operators.PersistSlots.cached(spark, "ml-el-comp-pred") {
       val m = train(spark, Electronic, numTrees = 60, maxDepth = 10)
-      val df = predictTrainingSet(spark, m, Electronic)
+      predictTrainingSet(spark, m, Electronic)
         .select(col("mp_id"), round(col("pred_log10"), 6).as("pred_log10"), col("label"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    })
+    }
 
   /** Export per-mp_id predictions plus the reference golden file as
     * parquet — the inputs of the ml_golden_gate oracle query. */

@@ -117,6 +117,13 @@ object Bpe {
     syms
   }
 
+  /** Session memo of trained merge tables: Verify trains once for the
+    * state export and would otherwise train a SECOND full 40-round run
+    * for the tx_bpe dump (~40 driver round-trips each — a material
+    * share of the Verify wall). Deterministic per (dir, nMerges), so
+    * memoizing is a pure dedup. Cleared with the other artifacts. */
+  private def mergesKey(dir: String, nMerges: Int): String = s"bpe-merges:$dir|$nMerges"
+
   /** Per-document BPE token counts under a vocabulary trained on the
     * same corpus. Each DISTINCT word is encoded once; the corpus pass is
     * then a join + arithmetic. The (word → cost) side is vocab-sized —
@@ -125,22 +132,10 @@ object Bpe {
     * own count × average width decides broadcast vs plain equi join
     * instead of an unconditional hint (the funnel/retention lesson).
     * `vocabBytesOverride` lets a spec pin either plan shape. */
-  /** Session cache for trained merge tables: Verify trains once for the
-    * state export and would otherwise train a SECOND full 40-round run
-    * for the tx_bpe dump (~40 driver round-trips each — a material
-    * share of the Verify wall). Deterministic per (dir, nMerges), so
-    * memoizing is a pure dedup. Cleared with the other artifacts. */
-  private val trainCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
-  private[operators] def clearTrainCache(): Unit = trainCache.clear()
-
-  private def trainCached(spark: SparkSession, dir: String, nMerges: Int): Seq[(String, String)] =
-    trainCache.computeIfAbsent(s"$dir|$nMerges", _ => train(spark, dir, nMerges))
-
   def tokenize(spark: SparkSession, dir: String, nMerges: Int = 40,
       vocabBytesOverride: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val merges = trainCached(spark, dir, nMerges)
+    val merges = PersistSlots.memo(spark, mergesKey(dir, nMerges))(train(spark, dir, nMerges))
     val bc = spark.sparkContext.broadcast(merges)
     // slot-memoized (NOT a bare .persist(): every tokenize call would
     // pin a fresh cached copy that nothing ever unpersists)
@@ -192,7 +187,7 @@ object Bpe {
     val states = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val merges = train(spark, dir, nMerges, stateSink = Some((r, df) =>
       states += df.withColumn("round", lit(r))))
-    trainCache.put(s"$dir|$nMerges", merges) // tokenize reuses this run
+    PersistSlots.memo(spark, mergesKey(dir, nMerges))(merges) // tokenize reuses this run
     if (states.nonEmpty)
       states.reduce(_.unionByName(_)).coalesce(1)
         .write.mode("overwrite").parquet(statesExport(dir))

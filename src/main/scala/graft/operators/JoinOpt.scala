@@ -29,21 +29,19 @@ object JoinOpt {
 
   val NBuckets = 8
 
-  // one bucketed-table write per (session, sfDir); tables are external
-  // (explicit /tmp path) so no warehouse dir is touched
-  private val prepared = scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   private def tag(dir: String): String =
     math.abs(dir.hashCode).toString
 
   /** Write orders + customer as bucketed/sorted tables on the join key
-    * (once per session+dir). `repartition(n, key)` aligns task hashing
+    * (once per session+dir, memoized in [[PersistSlots]], so a cleared
+    * session rewrites them; the tables are external — explicit /tmp
+    * path — so no warehouse dir is touched). `repartition(n, key)` aligns task hashing
     * with bucket hashing so each bucket is one file — which also lets
     * Spark trust the per-bucket sort order and skip the SortExec. */
   def ensureBucketed(spark: SparkSession, dir: String): (String, String) = {
     val t = tag(dir)
     val (ot, ct) = (s"graft_b_orders_$t", s"graft_b_customer_$t")
-    prepared.getOrElseUpdate(s"${spark.sparkContext.applicationId}|$dir", {
+    PersistSlots.memo(spark, s"bucketed:$dir") {
       def write(df: DataFrame, key: String, table: String): Unit = {
         spark.sql(s"DROP TABLE IF EXISTS $table")
         df.repartition(NBuckets, col(key))
@@ -54,7 +52,7 @@ object JoinOpt {
       }
       write(Tables.orders(spark, dir), "o_custkey", ot)
       write(Tables.customer(spark, dir), "c_custkey", ct)
-    })
+    }
     (ot, ct)
   }
 

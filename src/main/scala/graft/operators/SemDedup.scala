@@ -79,10 +79,8 @@ object SemDedup {
     * n for the constant-occupancy cluster count, and an un-memoized
     * count() is a full-table action on EVERY invocation (r9 review find
     * — the Mining.scala:115 lesson, same class). */
-  private val nCache = scala.collection.concurrent.TrieMap.empty[(String, String), Long]
   private def corpusN(spark: SparkSession, dir: String): Long =
-    nCache.getOrElseUpdate((spark.sparkContext.applicationId, dir),
-      Tables.embeddings(spark, dir).count())
+    PersistSlots.memo(spark, s"semdedup-n:$dir")(Tables.embeddings(spark, dir).count())
 
   /** The memoized coarse quantizer at SemDeDup's constant-occupancy k —
     * [[Similarity.ivfIndexFor]], so repeated calls (and the ANN family,

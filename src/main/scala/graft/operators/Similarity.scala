@@ -208,11 +208,8 @@ object Similarity {
   // whole-index memo (bucket frame AND the corpus-derived bits/tables):
   // without it every index-less lshTopK/embeddingCosineBucketed call pays
   // a corpus count just to re-derive the same two integers
-  private val lshCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), LshIndex]
-
   def buildLshIndex(spark: SparkSession, dir: String): LshIndex =
-    lshCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    PersistSlots.memo(spark, s"lsh:$dir") {
       val raw = emb(spark, dir)
       val n = raw.count()
       val nBits = lshBitsFor(n)
@@ -229,7 +226,7 @@ object Similarity {
           withBuckets(raw, nBits, nTables).select(col("vec_id"), col("tbl"), col("bucket")),
           "vec_id"))
       LshIndex(nBits, nTables, n, b)
-    })
+    }
 
   /** Persist the index: bucket rows as tbl-partitioned parquet plus a
     * one-row meta table carrying the hash width — a cold query session
@@ -494,49 +491,15 @@ object Similarity {
   def compactIvfIndex(spark: SparkSession, path: String): Unit =
     compactData(spark, path, "assignments", "cell", Seq("vec_id", "v", "cell"))
 
-  // per-process index reuse: queries and benches hitting the same corpus
-  // share one fitted quantizer instead of re-fitting per invocation.
-  // Keyed by Spark application id as well as (dir, k): a cached index's
-  // assignments DataFrame is bound to the session that built it, and must
-  // never be served to a later session in the same JVM. If the parquet
-  // under `dir` is REWRITTEN in-place mid-process, call clearIvfCache().
-  private val ivfCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), IvfIndex]
-
-  // the ivf2 super-cell hierarchy is a pure function of the cached
-  // centroids, but 25 driver-side Lloyd iterations over k centroids is
-  // real serial compute at the 10⁵-cell scale the operator targets —
-  // memoized beside the index it derives from (r9 review find: it was
-  // rebuilt on EVERY invocation)
-  private val hierCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), IvfHierarchy]
-
-  // filteredSearch's label-selectivity scalar, per (session, corpus)
-  private val shareCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Double]
-
-  /** Drop memoized LSH indexes (pairs with PersistSlots.clear, which
-    * releases the persisted bucket frames). */
-  def clearLshCache(): Unit = lshCache.clear()
-
   /** The memoized (session, corpus, k) IVF index — the accessor every
     * consumer outside this object must use: a direct [[buildIvfIndex]]
     * call re-runs the corpus count + sampled KMeans fit AND stacks a
     * fresh persisted assignments frame per invocation (r9 review find:
-    * SemDedup's end-to-end path did exactly that). */
+    * SemDedup's end-to-end path did exactly that). Queries and benches
+    * hitting the same corpus share one fitted quantizer; its
+    * assignments are released by [[ArtifactCaches]]. */
   def ivfIndexFor(spark: SparkSession, dir: String, nClusters: Int = 0): IvfIndex =
-    ivfCache.getOrElseUpdate((spark.sparkContext.applicationId, dir, nClusters),
-      buildIvfIndex(spark, dir, nClusters))
-
-  /** Drop all cached indexes (and release their persisted assignments) —
-    * required after rewriting a corpus dir in-place. */
-  def clearIvfCache(): Unit = {
-    ivfCache.values.foreach(i =>
-      try i.assignments.unpersist(false) catch { case _: Throwable => () })
-    ivfCache.clear()
-    hierCache.clear() // derived from the centroids dropped above
-    shareCache.clear() // corpus-derived scalar, same rewrite hazard
-  }
+    PersistSlots.memo(spark, s"ivf:$dir:$nClusters")(buildIvfIndex(spark, dir, nClusters))
 
   /** Per-row probe list: the `nProbe` nearest coarse centroids. The
     * centroid table is broadcast-scale by construction (√N rows), so the
@@ -684,10 +647,14 @@ object Similarity {
   def ivf2TopK(spark: SparkSession, dir: String, nClusters: Int = 0,
       index: Option[IvfIndex] = None, deepProbes: Boolean = false): DataFrame = {
     val idx = index.getOrElse(ivfIndexFor(spark, dir, nClusters))
+    // the super-cell hierarchy is a pure function of the cached
+    // centroids, but 25 driver-side Lloyd iterations over k centroids is
+    // real serial compute at the 10⁵-cell scale the operator targets —
+    // memoized beside the index it derives from (r9 review find: it was
+    // rebuilt on EVERY invocation)
     val hier = // a caller-supplied index must not share the keyed cache
       if (index.isDefined) buildHierarchy(idx.centroids)
-      else hierCache.getOrElseUpdate((spark.sparkContext.applicationId, dir, nClusters),
-        buildHierarchy(idx.centroids))
+      else PersistSlots.memo(spark, s"ivf-hier:$dir:$nClusters")(buildHierarchy(idx.centroids))
     val k2 = hier.superCentroids.length
     val nProbeEff = math.max(1,
       math.ceil(idx.centroids.length * (if (deepProbes) 12.0 else 6.0) / 16).toInt)
@@ -722,9 +689,6 @@ object Similarity {
     * point for a bandwidth-halving transform (a spikier real-embedding
     * spectrum keeps more at the same dims). */
   val PcaDims = 32
-
-  private val pcaCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), (Array[Array[Double]], Long)]
 
   /** Top-`dims` eigenvectors (rows, unit) of the sampled second moment.
     * Same fit discipline as OPQ: the driver sees one d×d matrix from a
@@ -766,7 +730,7 @@ object Similarity {
     * count rides along so serving never pays a counting job (the
     * withBuckets lesson). */
   private def pcaFit(spark: SparkSession, dir: String, dims: Int): (Array[Array[Double]], Long) =
-    pcaCache.getOrElseUpdate((spark.sparkContext.applicationId, dir, dims), {
+    PersistSlots.memo(spark, s"pca:$dir:$dims") {
       val e = emb(spark, dir)
       val n = e.count()
       val frac = math.min(1.0, 8192.0 / math.max(1L, n).toDouble)
@@ -774,7 +738,7 @@ object Similarity {
       val sm = secondMoment(fitOn.select("v").rdd.map(_.getSeq[Double](0).toArray), Dim)
       val (evals, evecs) = graft.functions.JacobiEig.decompose(sm)
       (evals.indices.sortBy(i => -evals(i)).take(dims).map(evecs).toArray, n)
-    })
+    }
 
   /** Projection v ↦ Rv as a broadcast tight loop. */
   private def projectUdf(spark: SparkSession,
@@ -1223,17 +1187,6 @@ object Similarity {
   def compactPqIndex(spark: SparkSession, path: String): Unit =
     compactData(spark, path, "codes", "cell", Seq("vec_id", "cell", "code"))
 
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), PqIndex]
-
-  /** Drop cached PQ indexes (release persisted codes) — required after
-    * rewriting a corpus dir in-place (pairs with clearIvfCache). */
-  def clearPqCache(): Unit = {
-    pqCache.values.foreach(i =>
-      try i.codes.unpersist(false) catch { case _: Throwable => () })
-    pqCache.clear()
-  }
-
   /** ANN via IVF-PQ: probe the nearest IVF cells, score candidates with
     * ADC over the byte codes (corpus vectors NOT in the join), keep the
     * top `rerank` per query, and exactly rescore only those. Output
@@ -1255,8 +1208,7 @@ object Similarity {
     // caller-supplied index must NEVER share the keyed cache at all
     val pqi = pq.getOrElse {
       if (index.isDefined) buildPqIndex(spark, dir, idx, residual = residual, opq = opq)
-      else pqCache.getOrElseUpdate(
-        (spark.sparkContext.applicationId, dir, s"$nClusters:$residual:$opq"),
+      else PersistSlots.memo(spark, s"pq:$dir:$nClusters:$residual:$opq")(
         buildPqIndex(spark, dir, idx, residual = residual, opq = opq))
     }
     val nProbeEff =
@@ -1396,8 +1348,7 @@ object Similarity {
     // memoized per (session, corpus): the doc above promises "a stats
     // lookup, not a job", but the agg itself is a full corpus scan — the
     // memo makes repeated serving calls pay it once (r9 review find)
-    val maxShare = shareCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
+    val maxShare = PersistSlots.memo(spark, s"label-share:$dir")(
       raw.groupBy("label").agg(count(lit(1)).as("n"))
         .agg((max("n") / sum("n")).as("share")).head().getDouble(0))
     val w = Window.partitionBy("q_id").orderBy(round(col("cs"), 6).desc, col("nbr_id"))

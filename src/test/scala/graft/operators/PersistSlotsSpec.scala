@@ -1,13 +1,22 @@
 package graft.operators
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSpec
+import graft.ml.SparkActivity
 
-/** Contract of the memoized materialization slots — in particular the
-  * lineage-cut [[PersistSlots.cachedCheckpoint]] variant q33_triangles
-  * relies on to keep its edge-build shuffle files reclaimable
-  * (Graphs.scala; BENCH_NOTES r8). */
+/** Contract of the one artifact store: the memoized materialization
+  * slots — in particular the lineage-cut [[PersistSlots.cachedCheckpoint]]
+  * variant q33_triangles relies on to keep its edge-build shuffle files
+  * reclaimable (Graphs.scala; BENCH_NOTES r8) — and the value memo, whose
+  * single clear() makes every operator's next call cold. */
 class PersistSlotsSpec extends SparkSpec {
 
   private def shuffleBuild() = {
@@ -77,6 +86,56 @@ class PersistSlotsSpec extends SparkSpec {
         .find(_.getName == "checkpointDir_$eq")
         .foreach(_.invoke(spark.sparkContext, Option.empty[String]))
       PersistSlots.clear()
+      Files.walk(Paths.get(ckptDir)).iterator().asScala.toSeq.reverse.foreach(Files.delete)
     }
+  }
+
+  test("memo builds once when 8 threads ask for one key together") {
+    val key = s"spec-memo-${System.nanoTime()}"
+    val builds = new AtomicInteger()
+    val go = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(8)
+    try {
+      val calls = (1 to 8).map(_ => pool.submit(new Callable[Int] {
+        def call(): Int = {
+          go.await()
+          PersistSlots.memo(spark, key) { builds.incrementAndGet(); Thread.sleep(200); 42 }
+        }
+      }))
+      go.countDown()
+      assert(calls.map(_.get(60, TimeUnit.SECONDS)) == Seq.fill(8)(42))
+      assert(builds.get == 1, s"the build ran ${builds.get} times")
+    } finally pool.shutdownNow()
+  }
+
+  test("after ArtifactCaches.clear() a second pcaTopK runs its PCA fit again") {
+    ArtifactCaches.clear()
+    val cold = SparkActivity.of(spark)(Similarity.pcaTopK(spark, sf))
+    val warm = SparkActivity.of(spark)(Similarity.pcaTopK(spark, sf))
+    ArtifactCaches.clear()
+    val again = SparkActivity.of(spark)(Similarity.pcaTopK(spark, sf))
+    // the fit (corpus count + second-moment treeAggregate) and the
+    // projected-corpus slot run when the operator is built; warm, neither
+    assert(warm.jobs < cold.jobs, s"a warm pcaTopK ran ${warm.jobs} jobs, a cold one ${cold.jobs}")
+    assert(again.jobs == cold.jobs,
+      s"after clear() pcaTopK ran ${again.jobs} jobs, the first cold call ${cold.jobs}")
+  }
+
+  test("clear() unpersists a memoized IvfIndex's assignments") {
+    val idx = Similarity.ivfIndexFor(spark, sf)
+    assert(idx.assignments.storageLevel != StorageLevel.NONE)
+    ArtifactCaches.clear()
+    assert(idx.assignments.storageLevel == StorageLevel.NONE)
+  }
+
+  test("PersistSlots.scala is the only main source with a memo map") {
+    val withMaps = Files.walk(Paths.get("src/main/scala/graft")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter { p =>
+        val src = Files.readString(p)
+        src.contains("TrieMap") || src.contains("ConcurrentHashMap")
+      }
+      .map(_.toString).toSeq.sorted
+    assert(withMaps == Seq(Paths.get("src/main/scala/graft/operators/PersistSlots.scala").toString))
   }
 }

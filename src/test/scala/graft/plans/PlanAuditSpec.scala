@@ -48,11 +48,15 @@ class PlanAuditSpec extends AnyFunSuite {
   )
 
   test("every registered query plans without a CartesianProduct; nested loops only where designed") {
-    // the sketch and BPE gate queries read exports that Verify writes
-    // ahead of its dump; write them here so the sweep plans those queries
-    // whatever ran before it
+    // the sketch, BPE, SemDeDup and quality-classifier gate queries read
+    // exports that Verify writes ahead of its dump; write them here so
+    // the sweep plans those queries whatever ran before it. exportCells
+    // also records the dir SemDedup's oracle SQL names, which only
+    // Verify's oracle dump reads, in its own JVM
     graft.operators.Sketches.exportEstimates(spark, sf)
     graft.operators.Bpe.exportStates(spark, sf)
+    graft.operators.SemDedup.exportCells(spark, sf)
+    graft.ml.QualityClassifier.exportScored(spark, sf)
     var audited = 0
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
@@ -77,7 +81,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // would otherwise pass vacuously (a few queries read the reference
     // checkout or other Verify-only exports, which a bare test
     // environment may lack)
-    assert(audited >= SparkEntry.queries.size - 8,
+    assert(audited >= SparkEntry.queries.size - 6,
       s"only $audited of ${SparkEntry.queries.size} queries auditable")
     // and the allow-list must not rot: every entry still names a query
     val unknown = nlAllowed -- SparkEntry.queries.keySet
