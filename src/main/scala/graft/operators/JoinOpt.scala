@@ -35,9 +35,10 @@ object JoinOpt {
   /** Write orders + customer as bucketed/sorted tables on the join key
     * (once per session+dir, memoized in [[PersistSlots]], so a cleared
     * session rewrites them; the tables are external — explicit /tmp
-    * path — so no warehouse dir is touched). `repartition(n, key)` aligns task hashing
-    * with bucket hashing so each bucket is one file — which also lets
-    * Spark trust the per-bucket sort order and skip the SortExec. */
+    * path — so no warehouse dir is touched). `repartition(n, key)`
+    * aligns task hashing with bucket hashing so each bucket is one file
+    * — which also lets Spark trust the per-bucket sort order and skip
+    * the SortExec. */
   def ensureBucketed(spark: SparkSession, dir: String): (String, String) = {
     val t = tag(dir)
     val (ot, ct) = (s"graft_b_orders_$t", s"graft_b_customer_$t")
